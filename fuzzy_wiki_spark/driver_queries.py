@@ -4249,9 +4249,7 @@ def q_seg_term_level(spark, sf_dir):
     Oracle = ORACLE_SQL["term_level_filtered"] verbatim."""
     import numpy as np
 
-    from fuzzy_wiki_spark.operators.segment_query import (
-        search_segments_batch,
-    )
+    from fuzzy_wiki_spark.operators.segment_query import search_segments
 
     idx = _seg_simple_index(spark, sf_dir, "fw_segtl_")
     allowed = sorted(
@@ -4261,10 +4259,10 @@ def q_seg_term_level(spark, sf_dir):
         Clause(i, "content", (t,), 1.0, 0, False)
         for i, t in enumerate(BM25_QUERY_TERMS)
     ]
-    res = search_segments_batch(
+    res = search_segments(
         spark,
         idx.segments,
-        {0: clauses},
+        clauses,
         idx._term_df(BM25_QUERY_TERMS),
         idx.field_stats,
         k=10,
@@ -7705,19 +7703,17 @@ def q_seg_snippets(spark, sf_dir):
     SegmentIndex.snippets shape): block-max top-10 (MaxScore ON — a
     plain top-k), then the snippet window over the k hit texts only.
     Oracle = ORACLE_SQL["snippets"] verbatim."""
-    from fuzzy_wiki_spark.operators.segment_query import (
-        search_segments_batch,
-    )
+    from fuzzy_wiki_spark.operators.segment_query import search_segments
 
     idx = _seg_simple_index(spark, sf_dir, "fw_segsn_")
     clauses = [
         Clause(i, "content", (t,), 1.0, 0, False)
         for i, t in enumerate(BM25_QUERY_TERMS)
     ]
-    hits = search_segments_batch(
+    hits = search_segments(
         spark,
         idx.segments,
-        {0: clauses},
+        clauses,
         idx._term_df(BM25_QUERY_TERMS),
         idx.field_stats,
         k=10,
@@ -7758,9 +7754,7 @@ def q_seg_corrected(spark, sf_dir):
     segment term dictionary, the corrected clauses served by the normal
     block-max search. Oracle = ORACLE_SQL["corrected_search"]
     verbatim."""
-    from fuzzy_wiki_spark.operators.segment_query import (
-        search_segments_batch,
-    )
+    from fuzzy_wiki_spark.operators.segment_query import search_segments
     from fuzzy_wiki_spark.operators.term_expansion import correct_term
 
     idx = _seg_simple_index(spark, sf_dir, "fw_segco_")
@@ -7778,10 +7772,10 @@ def q_seg_corrected(spark, sf_dir):
         Clause(i, "content", (t,), 1.0, 0, False)
         for i, t in enumerate(corrected)
     ]
-    res = search_segments_batch(
+    res = search_segments(
         spark,
         idx.segments,
-        {0: clauses},
+        clauses,
         idx._term_df(corrected),
         idx.field_stats,
         k=10,
@@ -7836,9 +7830,7 @@ def q_seg_explain(spark, sf_dir):
     SegmentIndex.explain shape): top-1 via block-max search, factors
     from the term-pruned decode filtered to that one doc. Oracle =
     ORACLE_SQL["explain_score"] verbatim."""
-    from fuzzy_wiki_spark.operators.segment_query import (
-        search_segments_batch,
-    )
+    from fuzzy_wiki_spark.operators.segment_query import search_segments
     from fuzzy_wiki_spark.operators.topk import idf as _idf
 
     idx = _seg_simple_index(spark, sf_dir, "fw_segex_")
@@ -7848,8 +7840,8 @@ def q_seg_explain(spark, sf_dir):
         for i, t in enumerate(BM25_QUERY_TERMS)
     ]
     top1 = (
-        search_segments_batch(
-            spark, idx.segments, {0: clauses}, term_df, idx.field_stats, k=1
+        search_segments(
+            spark, idx.segments, clauses, term_df, idx.field_stats, k=1
         )
         .collect()[0]["doc_id"]
     )

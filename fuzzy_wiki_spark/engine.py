@@ -840,23 +840,18 @@ class SegmentIndex:
         docs (partial + remaining clause upper bounds < cursor score), the
         same way Lucene's paging collector keeps WAND live on page N
         (operators/segment_query.py bucket_topk, tests/test_blockmax.py)."""
-        from fuzzy_wiki_spark.operators.segment_query import (
-            search_segments_batch,
-        )
+        from fuzzy_wiki_spark.operators.segment_query import search_segments
 
         clauses = compile_query(query)
         term_df = self._term_df(sorted({t for c in clauses for t in c.terms}))
-        out = search_segments_batch(
+        return search_segments(
             self.spark,
             self.segments,
-            {0: clauses},
+            clauses,
             term_df,
             self.field_stats,
             k=k,
             after=after,
-        )
-        return out.select("doc_id", "score").orderBy(
-            F.desc("score"), F.asc("doc_id")
         )
 
     def search_filtered(
@@ -873,23 +868,18 @@ class SegmentIndex:
         redirects/tombstones are."""
         import numpy as np
 
-        from fuzzy_wiki_spark.operators.segment_query import (
-            search_segments_batch,
-        )
+        from fuzzy_wiki_spark.operators.segment_query import search_segments
 
         clauses = compile_query(query)
         term_df = self._term_df(sorted({t for c in clauses for t in c.terms}))
-        out = search_segments_batch(
+        return search_segments(
             self.spark,
             self.segments,
-            {0: clauses},
+            clauses,
             term_df,
             self.field_stats,
             k=k,
             allowed=np.asarray(sorted(allowed_ids), dtype=np.int64),
-        )
-        return out.select("doc_id", "score").orderBy(
-            F.desc("score"), F.asc("doc_id")
         )
 
     def search_collapse(
@@ -1197,7 +1187,7 @@ class SegmentIndex:
         Serving path (default): atoms are compiled driver-side into
         AtomSpecs (idf weights from a term_stats point lookup, dictionary
         expansions from the vocabulary-sized term_stats scan), then ONE
-        applyInPandas job evaluates every atom in numpy inside each bucket
+        score_buckets job evaluates every atom in numpy inside each bucket
         (a doc's postings live entirely in its bucket, so per-bucket scores
         are final) — the same single-pruned-scan shape that makes seg BM25
         fast. Decode cost is Σ|posting lists(query terms)|, never the index.
@@ -1951,9 +1941,7 @@ class SegmentIndex:
         the normal block-max segment search, source excluded. Selection
         rule is identical to operators/topk.more_like_this (tf·idf desc,
         term asc) — parity pinned in tests/test_segment_surfaces.py."""
-        from fuzzy_wiki_spark.operators.segment_query import (
-            search_segments_batch,
-        )
+        from fuzzy_wiki_spark.operators.segment_query import search_segments
         from fuzzy_wiki_spark.operators.topk import idf as _idf
 
         doc_count, _ = self.field_stats[field]
@@ -1974,10 +1962,10 @@ class SegmentIndex:
             Clause(i, field, (t,), 1.0, 0, False)
             for i, t in enumerate(interesting)
         ]
-        res = search_segments_batch(
+        res = search_segments(
             self.spark,
             self.segments,
-            {0: clauses},
+            clauses,
             {(field, t): dfm.get(t, 0) for t in interesting},
             self.field_stats,
             k=k + 1,
@@ -1986,7 +1974,6 @@ class SegmentIndex:
             res.where(F.col("doc_id") != doc_id)
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
-            .select("doc_id", "score")
         )
 
     def more_like_this_text(
@@ -2003,9 +1990,7 @@ class SegmentIndex:
         operators/topk.more_like_this_text."""
         from collections import Counter
 
-        from fuzzy_wiki_spark.operators.segment_query import (
-            search_segments_batch,
-        )
+        from fuzzy_wiki_spark.operators.segment_query import search_segments
         from fuzzy_wiki_spark.operators.topk import idf as _idf
 
         doc_count, _ = self.field_stats[field]
@@ -2024,17 +2009,13 @@ class SegmentIndex:
             Clause(i, field, (t,), 1.0, 0, False)
             for i, t in enumerate(interesting)
         ]
-        return (
-            search_segments_batch(
-                self.spark,
-                self.segments,
-                {0: clauses},
-                {(field, t): dfm[t] for t in interesting},
-                self.field_stats,
-                k=k,
-            )
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "score")
+        return search_segments(
+            self.spark,
+            self.segments,
+            clauses,
+            {(field, t): dfm[t] for t in interesting},
+            self.field_stats,
+            k=k,
         )
 
     def span_near(

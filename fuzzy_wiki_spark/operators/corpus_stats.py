@@ -534,16 +534,22 @@ def ppl_buckets(
     n_total = ranked.groupBy().agg(
         F.count(F.lit(1)).alias("_N")
     )
-    base = (F.col("_N") / n_buckets).cast("long")  # floor(N/n)
-    rem = F.col("_N") % n_buckets
-    # ranks 1 .. rem*(base+1) fall in the first `rem` (larger) buckets
-    head = rem * (base + 1)
-    r0 = F.col("_rn") - 1
-    bucket = F.when(
-        F.col("_rn") <= head, (r0 / (base + 1)).cast("long") + 1
-    ).otherwise(rem + ((r0 - head) / base).cast("long") + 1)
     return (
         ranked.crossJoin(F.broadcast(n_total))
-        .withColumn("bucket", bucket.cast("int"))
+        .withColumn("bucket", ntile_of_rank(n_buckets).cast("int"))
         .drop("_rn", "_N")
+    )
+
+
+def ntile_of_rank(n_buckets: int):
+    """ntile's bucket for the 1-based rank ``_rn`` among ``_N`` rows, in
+    integer arithmetic (``div``): ranks 1 .. rem·(base+1) fall in the
+    first rem = N % n (larger) buckets. Double division misplaces bucket
+    boundary rows once ranks pass 2^53."""
+    base = f"(_N div {n_buckets})"
+    rem = f"(_N % {n_buckets})"
+    head = f"({rem} * ({base} + 1))"
+    return F.expr(
+        f"CASE WHEN _rn <= {head} THEN (_rn - 1) div ({base} + 1) + 1 "
+        f"ELSE {rem} + (_rn - 1 - {head}) div {base} + 1 END"
     )

@@ -6,10 +6,12 @@ layout (segments.py) and executes the reference's scatter / partial-top-k /
 gather shape (Searcher.java:66-68 + WikiSearcher O23/O24 + merge O15)
 entirely inside Spark:
 
-    segments.where(term ∈ query ∪ {_dl,_redirect})   ← partition+rowgroup prune
-      → groupBy(bucket)                               ← no posting shuffle:
-        applyInPandas(bucket_topk)                      segments already
-      → TakeOrderedAndProject(k)                        bucket-partitioned
+    segments.where(term IN query ∪ {_dl,_redirect})  ← partition+rowgroup prune
+      → repartitionById(n, bucket)                   ← bucket b → task b mod n,
+        sortWithinPartitions(bucket)                   n = min(shuffle
+        mapInPandas(bucket_topk per bucket)            partitions, buckets)
+      → single query: TakeOrderedAndProject(k)
+        batch: row_number() per query_id, rank ≤ k
 
 Inside a bucket everything is vectorized numpy over decoded arrays:
 - delta+varint decode of doc_ids/tfs (codec.py),
@@ -26,14 +28,16 @@ Inside a bucket everything is vectorized numpy over decoded arrays:
   probed at candidate positions. Exact top-k, skew-proof (hot terms are
   split across buckets by construction).
 
-At 10^12-file scale each bucket is one task reading only the query terms'
-segment rows for its partition — the scan is pruned by partition (bucket)
-and by parquet row-group stats on the sorted ``term`` column.
+At 10^12-file scale each scoring task holds the buckets b ≡ i (mod n) and
+reads only the query terms' segment rows for them — the scan is pruned by
+partition (bucket) and by parquet row-group stats on the sorted ``term``
+column.
 """
 
 from __future__ import annotations
 
 import math
+import re
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -58,6 +62,8 @@ META_REDIRECT = "_redirect"
 # tombstoned docs until compaction, which is Lucene's deletes-until-merge
 # semantics.
 META_DELETED = "_deleted"
+# hive-style partition directory of one bucket in a written segment table
+_BUCKET_DIR = re.compile(r"/bucket=(\d+)/")
 
 
 def _tf_norm(freq: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
@@ -465,6 +471,85 @@ def _query_weights(
     }
 
 
+def term_in(terms):
+    """``term IN (...)`` as one parsed SQL expression: a single JVM call,
+    where ``F.col("term").isin(terms)`` makes one py4j literal per term.
+    Pushes down as the same parquet ``In`` filter. Quote, backslash and
+    ``$`` (variable substitution) are written as ``\\uXXXX`` escapes, so
+    an unanalysed term (an ES ``term`` leaf) matches itself."""
+    from pyspark.sql import functions as F
+
+    def lit(t: str) -> str:
+        return "'" + "".join(
+            f"\\u{ord(c):04x}" if c in "'\\$" or ord(c) < 32 else c
+            for c in t
+        ) + "'"
+
+    return F.expr(f"term IN ({', '.join(map(lit, terms))})")
+
+
+def score_buckets(spark, segments_df, terms, score_bucket, schema: str):
+    """Run ``score_bucket(one bucket's rows of terms) → pdf`` once per
+    bucket, one Spark task per exchange partition; None or empty results
+    are dropped.
+
+    ``repartitionById`` sends bucket b to partition b mod n directly (no
+    hash collisions), and its REPARTITION_BY_NUM exchange is never
+    coalesced by AQE, so the buckets are scored in parallel. n is the
+    shuffle partition count capped at the bucket span of the scanned
+    ``bucket=`` directories: every Python task costs tens of ms to run
+    even with no rows, so no partition is planned that can hold no
+    bucket. Rows are sorted by bucket within a partition, so a task that
+    serves several buckets holds one bucket's rows at a time. Segments are
+    written partitioned by bucket, so the exchange moves only the pruned
+    (bucket × matched term) rows."""
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # listed on the unfiltered frame: listing the filtered one would
+    # optimise its IN list first (~30 ms at 300 terms)
+    ids = [
+        int(m[1])
+        for f in segments_df.inputFiles()
+        if (m := _BUCKET_DIR.search(f))
+    ]
+    if ids:
+        n = min(n, max(ids) + 1)
+
+    def buckets(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        held: list[pd.DataFrame] = []
+        for pdf in batches:
+            for b, g in pdf.groupby("bucket", sort=False):
+                if held and held[0]["bucket"].iat[0] != b:
+                    yield pd.concat(held, ignore_index=True)
+                    held = []
+                held.append(g)
+        if held:
+            yield pd.concat(held, ignore_index=True)
+
+    def per_task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for g in buckets(batches):
+            out = score_bucket(g)
+            if out is not None and len(out):
+                yield out
+
+    return (
+        segments_df.where(term_in(terms))
+        .repartitionById(n, "bucket")
+        .sortWithinPartitions("bucket")
+        .mapInPandas(per_task, schema)
+    )
+
+
+def _topk_rows(scored, k: int):
+    """Single-query finish: plans as TakeOrderedAndProject."""
+    from pyspark.sql import functions as F
+
+    return (
+        scored.select("doc_id", "score")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+    )
+
+
 def search_segments(
     spark,
     segments_df,
@@ -472,15 +557,23 @@ def search_segments(
     term_df: dict[tuple[str, str], int],
     field_stats: dict[str, tuple[int, float]],
     k: int = 10,
+    after: tuple[float, int] | None = None,
+    allowed: np.ndarray | None = None,
 ):
-    """Distributed segment search → global top-k (doc_id, score) DataFrame."""
-    from pyspark.sql import functions as F
+    """Distributed segment search → global top-k (doc_id, score) DataFrame.
 
-    out = search_segments_batch(
-        spark, segments_df, {0: clauses}, term_df, field_stats, k=k
-    )
-    return out.select("doc_id", "score").orderBy(
-        F.desc("score"), F.asc("doc_id")
+    ``after=(score, doc_id)`` is a search-after cursor: only docs ranked
+    strictly after it count. ``allowed`` (sorted doc ids) restricts the
+    candidates to a filter. MaxScore stays on for both: bucket_topk seeds
+    θ only from guaranteed-eligible docs (cursor) or from allowed docs."""
+    if not clauses:
+        return spark.createDataFrame([], "doc_id long, score double")
+    return _topk_rows(
+        _bucket_hits(
+            spark, segments_df, {0: clauses}, term_df, field_stats,
+            k, after, allowed,
+        ),
+        k,
     )
 
 
@@ -491,12 +584,10 @@ def search_segments_batch(
     term_df: dict[tuple[str, str], int],
     field_stats: dict[str, tuple[int, float]],
     k: int | None = 10,
-    after: tuple[float, int] | None = None,
-    allowed: np.ndarray | None = None,
 ):
     """Batch replay over the segment index → (query_id, doc_id, score, rank).
 
-    One job for the whole query set: each bucket task receives the union of
+    One job for the whole query set: each bucket receives the union of
     all queries' segment rows and scores every query against them — a
     bucket's meta rows (dl map) and any shared term's postings are decoded
     ONCE for the set, not once per query. Per-bucket partial top-k per
@@ -510,10 +601,25 @@ def search_segments_batch(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    schema = "query_id int, doc_id long, score double"
     queries = {qid: cls for qid, cls in queries.items() if cls}
     if not queries:
-        return spark.createDataFrame([], schema + ", rank int")
+        return spark.createDataFrame(
+            [], "query_id int, doc_id long, score double, rank int"
+        )
+    local = _bucket_hits(
+        spark, segments_df, queries, term_df, field_stats, k
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    out = local.withColumn("rank", F.row_number().over(w))
+    return out if k is None else out.where(F.col("rank") <= k)
+
+
+def _bucket_hits(
+    spark, segments_df, queries, term_df, field_stats, k,
+    after=None, allowed=None,
+):
+    """Per-bucket partial top-k of every (non-empty) query →
+    (query_id, doc_id, score), unranked."""
     full_set = k is None
     # a sentinel larger than any bucket's doc count: every size>k guard in
     # bucket_topk stays False and the final [:k] slice keeps everything
@@ -529,9 +635,7 @@ def search_segments_batch(
         {t for cls in queries.values() for c in cls for t in c.terms}
     ) + [META_DL, META_REDIRECT, META_DELETED]
 
-    pruned = segments_df.where(F.col("term").isin(all_terms))
-
-    def per_bucket(_, g):
+    def per_bucket(g):
         outs = []
         cache: dict = {}  # shared decode across the query set
         for qid, cls in queries.items():
@@ -541,10 +645,8 @@ def search_segments_batch(
                 weights[qid],
                 avgdl,
                 eff_k,
-                # MaxScore stays ON for cursor pages and filtered queries:
-                # bucket_topk seeds θ only from guaranteed-eligible docs
-                # (cursor) / restricts candidates to the filter (allowed).
-                # OFF for full-set mode (docstring).
+                # MaxScore stays ON for cursor pages and filtered queries
+                # (search_segments); OFF for full-set mode (docstring).
                 use_maxscore=not full_set,
                 cache=cache,
                 after=after,
@@ -553,19 +655,15 @@ def search_segments_batch(
             if len(r):
                 r.insert(0, "query_id", np.int32(qid))
                 outs.append(r)
-        if not outs:
-            return pd.DataFrame(
-                {"query_id": [], "doc_id": [], "score": []}
-            ).astype({"query_id": "int32", "doc_id": "int64", "score": "float64"})
-        return pd.concat(outs, ignore_index=True)
+        return pd.concat(outs, ignore_index=True) if outs else None
 
-    # segments are written partitioned by bucket, so this groupBy's exchange
-    # moves only the pruned (bucket × matched term) rows — a few KB/bucket;
-    # AQE coalesces the tiny post-shuffle partitions.
-    local = pruned.groupBy("bucket").applyInPandas(per_bucket, schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    out = local.withColumn("rank", F.row_number().over(w))
-    return out if full_set else out.where(F.col("rank") <= k)
+    return score_buckets(
+        spark,
+        segments_df,
+        all_terms,
+        per_bucket,
+        "query_id int, doc_id long, score double",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -574,10 +672,10 @@ def search_segments_batch(
 # plans/qlang.execute_extended runs the same semantics over the relational
 # postings DataFrame (one frame per atom unioned into a single aggregate) —
 # that stays as the SQL-comparable differential path. This executor is the
-# SERVING path: one applyInPandas job over the bucket-partitioned segments,
+# SERVING path: one score_buckets job over the bucket-partitioned segments,
 # every atom evaluated in numpy inside the bucket (a doc's postings live
 # entirely in its bucket, so per-bucket scores are final), local top-k,
-# thin global window — the same shape that makes bucket_topk fast.
+# TakeOrderedAndProject finish — the same shape as search_segments.
 # Parity with execute_extended is pinned by tests/test_segment_surfaces.py.
 # ---------------------------------------------------------------------------
 
@@ -854,10 +952,8 @@ def search_segments_extended(
 ):
     """Distributed extended query over the segment layout: ONE job — prune
     the scan to the union of every atom's terms (+ meta rows), per-bucket
-    numpy evaluation (extended_bucket_topk), thin global window finish."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
+    numpy evaluation (extended_bucket_topk), TakeOrderedAndProject
+    finish."""
     schema = "doc_id long, score double"
     if not specs:
         return spark.createDataFrame([], schema)
@@ -866,15 +962,11 @@ def search_segments_extended(
     all_terms = sorted(
         {t for s in specs for t in s.terms}
     ) + [META_DL, META_DELETED]
-    pruned = segments_df.where(F.col("term").isin(all_terms))
-
-    def per_bucket(_, g):
-        return extended_bucket_topk(g, specs, avgdl, k, n_must)
-
-    local = pruned.groupBy("bucket").applyInPandas(per_bucket, schema)
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("doc_id", "score")
+    local = score_buckets(
+        spark,
+        segments_df,
+        all_terms,
+        lambda g: extended_bucket_topk(g, specs, avgdl, k, n_must),
+        schema,
     )
+    return _topk_rows(local, k)

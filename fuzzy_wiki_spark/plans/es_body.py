@@ -880,7 +880,7 @@ def es_search(
         # (plans/qlang.py — +must/-must_not, "phrase"~slop, wildcards,
         # fuzzy, /regexp/, field: selectors, ^boosts) served by the
         # segment-native extended executor (SegmentIndex.extended — ONE
-        # pruned-scan applyInPandas job)
+        # pruned-scan score_buckets job)
         qs = query["query_string"]
         text = qs["query"] if isinstance(qs, dict) else qs
         hits = idx.extended(text, k=k_fetch, analyze=analyze)
@@ -1239,6 +1239,12 @@ def es_search(
         if "inner_hits" in hc:
             from fuzzy_wiki_spark.operators.collapse import grouped_topk
 
+            if offset:
+                # m child rows per parent: a row-offset page has no ES
+                # meaning (same rule as collapse.inner_hits)
+                raise ValueError(
+                    "from cannot combine with has_child.inner_hits"
+                )
             hits = grouped_topk(
                 full,
                 docs.select(
@@ -1252,7 +1258,7 @@ def es_search(
                 full,
                 docs,
                 hc["type"],
-                k=k,
+                k=k_fetch,
                 score_mode=hc.get("score_mode", "max"),
                 min_children=int(hc.get("min_children", 1)),
                 max_children=(
@@ -1529,13 +1535,19 @@ def es_search(
             raise ValueError("min_score needs a scored hits frame")
         hits = hits.where(F.col("score") >= float(body["min_score"]))
     if offset:
-        if not {"doc_id", "score"} <= set(hits.columns):
-            raise ValueError("from/offset pinned to scored (doc_id, score)")
+        # hits are keyed by doc_id, or by parent for has_child
+        key = next(
+            (c for c in ("doc_id", "parent") if c in hits.columns), None
+        )
+        if key is None or "score" not in hits.columns:
+            raise ValueError(
+                "from/offset pinned to scored (doc_id|parent, score)"
+            )
         from pyspark.sql import Window
 
         # the frame is ≤ from+size rows (already cut by the operator) —
         # the rank window is driver-trivial, never corpus-sized
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
+        w = Window.orderBy(F.desc("score"), F.asc(key))
         hits = (
             hits.withColumn("_r", F.row_number().over(w))
             .where(F.col("_r") > offset)

@@ -308,3 +308,33 @@ def test_ppl_buckets_scalable_equals_ntile(spark):
             for r in CS.ppl_buckets(scored, n, scalable=True).collect()
         )
         assert exact == scal, f"n_buckets={n}"
+
+
+def test_ntile_of_rank_integer_division_at_boundary_rows(spark):
+    """The scalable bucket id is integer arithmetic: at ranks past 2^53
+    the first and last row of every bucket still get ntile's bucket
+    (double division put these rows one bucket off)."""
+    def ntile(rn, n_rows, n):
+        base, rem = divmod(n_rows, n)
+        head = rem * (base + 1)
+        if rn <= head:
+            return (rn - 1) // (base + 1) + 1
+        return rem + (rn - 1 - head) // base + 1
+
+    rows = []
+    for n_rows, n in ((2**53 + 1, 3), (10**17 + 1, 7), (2**62 + 5, 2)):
+        base, rem = divmod(n_rows, n)
+        first = 1
+        for j in range(n):
+            size = base + 1 if j < rem else base
+            rows += [(first, n_rows, n), (first + size - 1, n_rows, n)]
+            first += size
+    df = spark.createDataFrame(rows, "_rn long, _N long, n int")
+    for n in sorted({r[2] for r in rows}):
+        got = [
+            (r["_rn"], r["_N"], r["b"])
+            for r in df.where(F.col("n") == n)
+            .select("_rn", "_N", CS.ntile_of_rank(n).alias("b"))
+            .collect()
+        ]
+        assert got and all(b == ntile(rn, N, n) for rn, N, b in got)

@@ -1026,6 +1026,29 @@ def test_join_field_kinds(spark, setup):
         }}}, docs=docs)
 
 
+def test_has_child_from_pages_the_parent_ranking(spark, setup):
+    """has_child with ``from`` fetches from+size parents and returns the
+    page after the first ``from`` (score desc, parent asc); combined with
+    inner_hits it is rejected, as collapse.inner_hits is."""
+    import pytest
+
+    idx, dv = setup
+    docs = dv.withColumn("src", (F.col("doc_id") % 7).cast("string"))
+    body = {"query": {"has_child": {
+        "type": "src", "query": {"match": {"content": "binary tree"}},
+    }}}
+    ranking = [
+        tuple(r) for r in
+        es_search(idx, {**body, "size": 5}, docs=docs)["hits"]
+        .orderBy(F.desc("score"), F.asc("parent")).collect()
+    ]
+    assert len(ranking) == 5
+    page = es_search(idx, {**body, "from": 2, "size": 2}, docs=docs)
+    assert rows(page["hits"]) == sorted(ranking[2:4])
+    body["query"]["has_child"]["inner_hits"] = {"size": 2}
+    with pytest.raises(ValueError, match="has_child.inner_hits"):
+        es_search(idx, {**body, "from": 1}, docs=docs)
+
 def test_doc_value_query_kinds(spark, setup):
     """range / exists / ids in QUERY context: constant-score matches of
     the filter-DSL predicate over the docs table, boost honored, first-k

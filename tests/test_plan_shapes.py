@@ -363,3 +363,61 @@ def test_terms_with_metrics_single_aggregate(spark):
                 ("BroadcastHashJoin", "SortMergeJoin",
                  "ShuffledHashJoin"))
     assert njoin <= 2, plan
+
+
+def test_segment_search_scores_buckets_in_parallel_tasks(spark, tmp_path):
+    """Segment scoring is one mapInPandas task per shuffle partition
+    behind a REPARTITION_BY_NUM exchange (never a grouped-map stage that
+    AQE coalesces into one task), sized to the index's 2 buckets rather
+    than the session's 4 shuffle partitions, with rows sorted by bucket
+    inside a task; a single search finishes in TakeOrderedAndProject with
+    no window, a batch keeps its per-query rank window."""
+    import re
+
+    from fuzzy_wiki_spark.corpus import generate_docs_df
+    from fuzzy_wiki_spark.engine import SegmentIndex
+
+    idx = SegmentIndex.build(
+        spark, generate_docs_df(spark, 120, seed=3), str(tmp_path / "ix"),
+        n_buckets=2, mode="simple",
+    )
+    single = _plan(idx.search("binary tree", k=5))
+    ext = _plan(idx.extended("binary AND tree", k=5))
+    batch = _plan(idx.search_many(["binary tree", "search"], k=5))
+    for p in (single, ext, batch):
+        assert "FlatMapGroupsInPandas" not in p
+        assert "MapInPandas" in p
+        assert re.search(
+            r"direct_shuffle_partition_id\(bucket#\d+\), 2\), "
+            r"REPARTITION_BY_NUM", p
+        )
+        assert re.search(r"Sort \[bucket#\d+ ASC", p)
+    for p in (single, ext):
+        assert "TakeOrderedAndProject" in p
+        assert "Window" not in p
+    assert "Window" in batch
+
+
+def test_term_in_matches_isin_and_pushes_down(spark, tmp_path):
+    """The one-call ``term IN (...)`` predicate returns the same rows as
+    ``isin`` for unanalysed terms holding a quote, a backslash or a
+    variable-substitution pattern, and pushes down as the parquet In
+    filter."""
+    from fuzzy_wiki_spark.operators.segment_query import term_in
+
+    odd = ["it's", "a\\b", "\\'", "${spark.app.name}", "x\\u0041", "%_"]
+    rows = [(i, t) for i, t in enumerate(odd + ["plain", "other"])]
+    path = str(tmp_path / "t")
+    spark.createDataFrame(rows, "id int, term string").write.parquet(path)
+    df = spark.read.parquet(path)
+    terms = odd + ["plain", "absent"]
+    got = sorted(tuple(r) for r in df.where(term_in(terms)).collect())
+    want = sorted(
+        tuple(r) for r in df.where(F.col("term").isin(terms)).collect()
+    )
+    assert got == want and len(got) == len(odd) + 1
+    import re
+
+    assert re.search(
+        r"PushedFilters: \[[^\]]*In\(term, ", _plan(df.where(term_in(terms)))
+    )
