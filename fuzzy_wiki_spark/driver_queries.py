@@ -4473,7 +4473,7 @@ def q_seg_extended(spark, sf_dir):
     Lucene-QueryParser-subset query as ``extended_query`` (must/veto gating,
     BM25 term + sloppy-phrase scoring, constant-score prefix/fuzzy
     expansion) served from the compressed segments in ONE pruned-scan
-    applyInPandas job (operators/segment_query.py:search_segments_extended)
+    score_buckets job (operators/segment_query.py:search_segments_extended)
     instead of the relational per-atom union — oracle is the identical
     DuckDB SQL (ORACLE_SQL["extended_query"])."""
     import tempfile
@@ -4533,9 +4533,10 @@ def q_auto_compact_search(spark, sf_dir):
 def q_incremental_search(spark, sf_dir):
     """Multi-generation incremental index (streaming O11 path): documents
     indexed in 2 appended epochs, searched as the UNcompacted generation
-    union — bucket_topk k-way-merges the duplicate (bucket, field, term)
-    rows. Oracle: the same BM25 SQL skeleton as bm25_topk, i.e. the result
-    must be indistinguishable from a one-shot build."""
+    union — segment_query.BucketView k-way-merges the duplicate
+    (bucket, field, term) rows. Oracle: the same BM25 SQL skeleton as
+    bm25_topk, i.e. the result must be indistinguishable from a one-shot
+    build."""
     from fuzzy_wiki_spark.streaming.incremental import open_incremental
 
     out = _build_incremental(spark, sf_dir)

@@ -55,9 +55,9 @@ def _memo_term_df(
             for f, t, d in fetch(missing):
                 cache[(f, t)] = int(d)
         else:
-            rows = term_stats.where(
-                F.col("term").isin(missing)
-            ).collect()
+            from fuzzy_wiki_spark.operators.segment_query import term_in
+
+            rows = term_stats.where(term_in(missing)).collect()
             for r in rows:
                 cache[(r["field"], r["term"])] = r["df"]
         seen.update(missing)
@@ -1033,7 +1033,7 @@ class SegmentIndex:
 
         The segment files are term-sorted within each bucket partition
         (operators/segments.py write contract), so the term predicate —
-        `isin` for a literal list, a broadcast join for a DataFrame of
+        `term_in` for a literal list, a broadcast join for a DataFrame of
         expanded terms — prunes parquet row-groups before any byte is
         decoded; decode cost is Σ|posting list(term)|, never the corpus.
         Positions stay in wire format, so phrase matching works unchanged.
@@ -1046,7 +1046,7 @@ class SegmentIndex:
         against a doc_count-sized side — the same cost profile as the
         relational engine's doc_lens join).
         """
-        from fuzzy_wiki_spark.operators.segment_query import META_DELETED
+        from fuzzy_wiki_spark.operators.segment_query import term_in
         from fuzzy_wiki_spark.streaming.incremental import (
             segments_to_postings,
         )
@@ -1055,7 +1055,7 @@ class SegmentIndex:
         if isinstance(terms, DataFrame):
             matched = seg_f.join(F.broadcast(terms), "term")
         else:
-            matched = seg_f.where(F.col("term").isin(list(terms)))
+            matched = seg_f.where(term_in(list(terms)))
         posts = segments_to_postings(matched)
         # tombstoned docs (incremental deletes) never reach consumers;
         # redirect docs stay — indexed-but-filtered is the searcher's
@@ -1091,6 +1091,7 @@ class SegmentIndex:
     def _dls(self, field: str):
         """(doc_id, dl) for one field, decoded once per instance and
         persisted — a doc_count-sized frame every with_dl consumer joins."""
+        from fuzzy_wiki_spark.operators.segments import META_DL
         from fuzzy_wiki_spark.streaming.incremental import (
             segments_to_postings,
         )
@@ -1101,7 +1102,7 @@ class SegmentIndex:
             self._dls_cache[field] = (
                 segments_to_postings(
                     self.segments.where(
-                        (F.col("field") == field) & (F.col("term") == "_dl")
+                        (F.col("field") == field) & (F.col("term") == META_DL)
                     )
                 )
                 .select("doc_id", F.col("tf").cast("int").alias("dl"))

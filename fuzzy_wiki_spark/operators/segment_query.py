@@ -13,9 +13,15 @@ entirely inside Spark:
       → single query: TakeOrderedAndProject(k)
         batch: row_number() per query_id, rank ≤ k
 
-Inside a bucket everything is vectorized numpy over decoded arrays:
-- delta+varint decode of doc_ids/tfs (codec.py),
-- per-doc dl from the bucket's ``_dl`` meta row (same codec),
+Inside a bucket, one ``BucketView`` reads the segment rows column-wise
+and serves both kernels (``bucket_topk`` for BM25 clauses,
+``extended_bucket_topk`` for the extended query language); everything is
+vectorized numpy over decoded arrays:
+- delta+varint decode of doc_ids/tfs (codec.py), memoised per
+  (field, term) and k-way-merged across incremental generations,
+- per-doc dl from the bucket's ``_dl`` meta rows (same codec), and the
+  redirect and tombstone sets from ``_redirect``/``_deleted``; each kernel
+  applies its own exclusion policy to them,
 - term-clause contributions via searchsorted joins,
 - sloppy-phrase via the anchor-min matcher (positions decoded lazily, only
   for docs containing ALL phrase terms),
@@ -51,17 +57,15 @@ from fuzzy_wiki_spark.codec import (
     delta_decode_blocked,
     varint_decode,
 )
-from fuzzy_wiki_spark.operators.segments import BLOCK, decode_positions
+from fuzzy_wiki_spark.operators.segments import (
+    BLOCK,
+    META_DELETED,
+    META_DL,
+    META_REDIRECT,
+    decode_positions,
+)
 from fuzzy_wiki_spark.plans.query import B, K1, Clause
 
-META_DL = "_dl"
-META_REDIRECT = "_redirect"
-# tombstone marker (streaming/incremental.py delete_docs): excluded from
-# results exactly like redirects, but physically dropped — postings and
-# marker both — at compaction. Stats (df/doc_count/avgdl) keep counting
-# tombstoned docs until compaction, which is Lucene's deletes-until-merge
-# semantics.
-META_DELETED = "_deleted"
 # hive-style partition directory of one bucket in a written segment table
 _BUCKET_DIR = re.compile(r"/bucket=(\d+)/")
 
@@ -87,6 +91,123 @@ _EMPTY = pd.DataFrame({"doc_id": [], "score": []}).astype(
 PRUNE_STATS = {"blocks_decoded": 0, "blocks_total": 0, "cands_skipped": 0}
 
 
+class BucketView:
+    """One bucket's segment rows, read column-wise once and shared by the
+    segment kernels.
+
+    ``cols`` maps each column to its numpy array and ``rows`` each
+    (field, term) key to its row positions (for ``max_tf`` and block-max
+    metadata). Meta rows are decoded up front: ``dl[field]`` is (sorted
+    doc ids, doc lengths); ``redirects`` and ``deleted`` are sorted doc id
+    sets that each kernel applies by its own policy. ``postings`` and
+    ``positions`` are decoded on first use and memoised.
+
+    A key has one row per incremental generation holding the term
+    (streaming/incremental.py load_generations); decodes k-way-merge them
+    by doc_id. A doc_id lives in exactly one generation (append_batch's
+    contract), so the merge sorts disjoint runs.
+
+    ``meta`` (``self.meta`` of an earlier view of the same frame) skips the
+    meta decode; the posting memo always starts empty.
+    """
+
+    def __init__(self, seg_pdf: pd.DataFrame, meta: tuple | None = None):
+        self.cols = {c: seg_pdf[c].to_numpy() for c in seg_pdf.columns}
+        self.meta = self._read_meta() if meta is None else meta
+        self.rows, self.dl, self.redirects, self.deleted = self.meta
+        self._arrays: dict = {}
+        self._positions: dict = {}
+
+    def _read_meta(self):
+        rows: dict[tuple[str, str], list[int]] = {}
+        for i, key in enumerate(zip(self.cols["field"], self.cols["term"])):
+            rows.setdefault(key, []).append(i)
+        dl = {}
+        excluded = {META_REDIRECT: [], META_DELETED: []}
+        for f, t in list(rows):
+            if t == META_DL:
+                dl[f] = self._decode(rows.pop((f, t)))[:2]
+            elif t in excluded:
+                excluded[t] += [
+                    delta_decode_blocked(self.cols["doc_ids"][i], BLOCK)
+                    for i in rows.pop((f, t))
+                ]
+        redirects, deleted = (
+            np.unique(np.concatenate(p).astype(np.int64))
+            if p
+            else np.empty(0, dtype=np.int64)
+            for p in excluded.values()
+        )
+        return rows, dl, redirects, deleted
+
+    def _decode(self, rl: list[int]):
+        """Rows → (merged sorted doc ids, aligned tfs, merge order or None
+        for a single row)."""
+        c = self.cols
+        ids = [
+            delta_decode_blocked(c["doc_ids"][i], BLOCK).astype(np.int64)
+            for i in rl
+        ]
+        tfs = [decode_tfs(c["tfs"][i]).astype(np.float64) for i in rl]
+        if len(rl) == 1:
+            return ids[0], tfs[0], None
+        ids, tfs = np.concatenate(ids), np.concatenate(tfs)
+        order = np.argsort(ids, kind="stable")
+        return ids[order], tfs[order], order
+
+    def postings(self, field: str, term: str):
+        """→ (sorted doc ids, aligned tfs) of one key, or None."""
+        key = (field, term)
+        if key not in self._arrays:
+            rl = self.rows.get(key)
+            self._arrays[key] = None if rl is None else self._decode(rl)
+        got = self._arrays[key]
+        return None if got is None else got[:2]
+
+    def positions(self, field: str, term: str) -> list[np.ndarray]:
+        """Per-posting position lists aligned with ``postings``' ids,
+        decoded on first use (only phrase matching pays for them)."""
+        key = (field, term)
+        if key not in self._positions:
+            self.postings(field, term)
+            order = self._arrays[key][2]
+            plists = [
+                p.astype(np.int64)
+                for i in self.rows[key]
+                for p in decode_positions(
+                    self.cols["pos_lens"][i], self.cols["positions"][i]
+                )
+            ]
+            self._positions[key] = (
+                plists if order is None else [plists[j] for j in order]
+            )
+        return self._positions[key]
+
+    def phrase_candidates(self, field: str, terms):
+        """Docs holding every term → (sorted doc ids, Σ tf over ``terms``,
+        one list per term of the docs' position arrays), or None."""
+        arrs = [self.postings(field, t) for t in terms]
+        if any(a is None for a in arrs):
+            return None
+        cand = arrs[0][0]
+        for ids, _ in arrs[1:]:
+            cand = cand[np.isin(cand, ids, assume_unique=True)]
+        if cand.size == 0:
+            return None
+        freqs = np.zeros(cand.size)
+        pos_lists = []
+        for t, (ids, tfs) in zip(terms, arrs):
+            sel = np.searchsorted(ids, cand)
+            freqs += tfs[sel]
+            plist = self.positions(field, t)
+            pos_lists.append([plist[i] for i in sel])
+        return cand, freqs, pos_lists
+
+    def doc_len(self, field: str, ids: np.ndarray) -> np.ndarray:
+        all_ids, dls = self.dl[field]
+        return dls[np.searchsorted(all_ids, ids)]
+
+
 def bucket_topk(
     seg_pdf: pd.DataFrame,
     clauses: list[Clause],
@@ -99,6 +220,7 @@ def bucket_topk(
     allowed: np.ndarray | None = None,
 ) -> pd.DataFrame:
     """Score one bucket's segment rows → local top-k (doc_id, score).
+    Redirect and tombstoned docs are both excluded.
 
     Block-max WAND execution order (exact top-k, lazy decode):
       1. clause upper bounds from STORED max_tf (no posting decode),
@@ -113,160 +235,48 @@ def bucket_topk(
     A hot term (df ≈ 50% of the bucket) that lands non-essential therefore
     costs O(candidates) block decodes, not O(df) — the decode-bandwidth win
     block-max WAND exists for.
+
+    ``cache`` (one dict per bucket, shared by a query set) keeps the
+    bucket's ``BucketView`` under "view", so postings are decoded once for
+    the set, and the view's meta part under "meta": a new cache seeded
+    with only "meta" skips the meta decode but decodes postings again.
     """
-    # decode meta rows: per-field dl maps and redirect set. ``cache`` (one
-    # per bucket in batch replay) memoizes decodes across the query set.
-    #
-    # Multi-generation input: a (bucket, field, term) key may map to SEVERAL
-    # segment rows — one per generation of an incremental index
-    # (streaming/incremental.py load_generations) — so every key holds a
-    # LIST of rows and decode paths k-way-merge them by doc_id. Generations
-    # are append-only (a doc_id lives in exactly one generation — the
-    # contract append_batch enforces), so the merge is a sort of disjoint
-    # runs and per-doc stats never need combining across rows.
     if cache is None:
         cache = {}
-    if "meta" in cache:
-        dl_map, redirect_ids, rows = cache["meta"]
-    else:
-        dl_parts: dict[str, list[tuple[np.ndarray, np.ndarray]]] = {}
-        red_parts: list[np.ndarray] = []
-        rows: dict[tuple[str, str], list[dict]] = {}
-        # to_dict("records") over iterrows(): no per-row Series build —
-        # keeps a 1000-term extended query over many generations off a
-        # pandas-overhead hot path (VERDICT r2 'What's wrong #4')
-        for r in seg_pdf.to_dict("records"):
-            if r["term"] == META_DL:
-                dl_parts.setdefault(r["field"], []).append(
-                    (
-                        delta_decode_blocked(r["doc_ids"], BLOCK).astype(
-                            np.int64
-                        ),
-                        decode_tfs(r["tfs"]).astype(np.float64),
-                    )
-                )
-            elif r["term"] in (META_REDIRECT, META_DELETED):
-                # one exclusion set: redirects (O22 policy) + tombstones
-                red_parts.append(
-                    delta_decode_blocked(r["doc_ids"], BLOCK).astype(np.int64)
-                )
-            else:
-                rows.setdefault((r["field"], r["term"]), []).append(r)
-        dl_map: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for f, parts in dl_parts.items():
-            if len(parts) == 1:
-                dl_map[f] = parts[0]
-            else:
-                ids = np.concatenate([p[0] for p in parts])
-                dls = np.concatenate([p[1] for p in parts])
-                o = np.argsort(ids, kind="stable")
-                dl_map[f] = (ids[o], dls[o])
-        if not red_parts:
-            redirect_ids = np.empty(0, dtype=np.int64)
-        elif len(red_parts) == 1:
-            redirect_ids = red_parts[0]
-        else:
-            redirect_ids = np.unique(np.concatenate(red_parts))
-        cache["meta"] = (dl_map, redirect_ids, rows)
-
-    def term_arrays(field: str, term: str):
-        """→ (row_list, merged sorted doc_ids, aligned tfs, merge order)
-        or None. ``order`` is None for the single-row fast path."""
-        key = ("arr", field, term)
-        if key in cache:
-            return cache[key]
-        rlist = rows.get((field, term))
-        if rlist is None:
-            cache[key] = None
-            return None
-        if len(rlist) == 1:
-            r = rlist[0]
-            ids = delta_decode_blocked(r["doc_ids"], BLOCK).astype(np.int64)
-            tfs = decode_tfs(r["tfs"]).astype(np.float64)
-            order = None
-        else:
-            ids = np.concatenate(
-                [
-                    delta_decode_blocked(r["doc_ids"], BLOCK).astype(np.int64)
-                    for r in rlist
-                ]
-            )
-            tfs = np.concatenate(
-                [decode_tfs(r["tfs"]).astype(np.float64) for r in rlist]
-            )
-            order = np.argsort(ids, kind="stable")
-            ids, tfs = ids[order], tfs[order]
-        cache[key] = (rlist, ids, tfs, order)
-        return cache[key]
-
-    def term_positions(field: str, term: str) -> list[np.ndarray]:
-        """Per-posting position lists aligned with term_arrays' merged ids
-        (lazy — only the phrase path pays the positions decode)."""
-        key = ("pos", field, term)
-        if key in cache:
-            return cache[key]
-        rlist, _, _, order = term_arrays(field, term)
-        plists: list[np.ndarray] = []
-        for r in rlist:
-            plists.extend(
-                p.astype(np.int64)
-                for p in decode_positions(r["pos_lens"], r["positions"])
-            )
-        if order is not None:
-            plists = [plists[i] for i in order]
-        cache[key] = plists
-        return plists
-
-    def dl_for(field: str, ids: np.ndarray) -> np.ndarray:
-        all_ids, dls = dl_map[field]
-        idx = np.searchsorted(all_ids, ids)
-        return dls[idx]
+    view = cache.get("view")
+    if view is None:
+        view = cache["view"] = BucketView(seg_pdf, cache.get("meta"))
+        cache["meta"] = view.meta
+    col = view.cols
 
     # ---- pass 1: clause descriptors + upper bounds, NO posting decode ----
-    # each: (ub, clause, list-of-rows or per-term lists). A doc lives in
-    # exactly one generation row, so a multi-row key's max_tf bound is the
-    # MAX over rows, not the sum.
-    descs: list[tuple[float, Clause, object]] = []
+    # each: (ub, clause, row positions of its first term, which pass 3
+    # probes for a non-phrase clause). A doc lives in exactly one
+    # generation row, so a multi-row key's max_tf bound is the MAX over
+    # rows, not the sum.
+    descs: list[tuple[float, Clause, list[int]]] = []
     for cl in clauses:
         w = weights.get(cl.clause_id, 0.0)
         if w == 0.0:
             continue
-        if cl.is_phrase and len(cl.terms) > 1:
-            rls = [rows.get((cl.field, t)) for t in cl.terms]
-            if any(rl is None for rl in rls):
-                continue
-            ub = _clause_ub(
-                w, int(sum(max(int(r["max_tf"]) for r in rl) for rl in rls))
-            )
-            descs.append((ub, cl, rls))
-        else:
-            rl = rows.get((cl.field, cl.terms[0]))
-            if rl is None:
-                continue
-            descs.append(
-                (_clause_ub(w, max(int(r["max_tf"]) for r in rl)), cl, rl)
-            )
+        terms = cl.terms if cl.is_phrase else cl.terms[:1]
+        rls = [view.rows.get((cl.field, t)) for t in terms]
+        if any(rl is None for rl in rls):
+            continue
+        max_tf = sum(int(col["max_tf"][rl].max()) for rl in rls)
+        descs.append((_clause_ub(w, max_tf), cl, rls[0]))
     if not descs:
         return _EMPTY.copy()
     descs.sort(key=lambda x: -x[0])
 
-    def eval_clause(cl: Clause, payload) -> tuple[np.ndarray, np.ndarray] | None:
+    def eval_clause(cl: Clause) -> tuple[np.ndarray, np.ndarray] | None:
         """Full evaluation → (sorted doc_ids, contribution)."""
         w = weights[cl.clause_id]
         if cl.is_phrase and len(cl.terms) > 1:
-            arrs = [term_arrays(cl.field, t) for t in cl.terms]
-            cand = arrs[0][1]
-            for a in arrs[1:]:
-                cand = cand[np.isin(cand, a[1], assume_unique=True)]
-            if cand.size == 0:
+            got = view.phrase_candidates(cl.field, cl.terms)
+            if got is None:
                 return None
-            pos_lists = []
-            freqs = np.zeros(cand.size)
-            for t, (_, ids, tfs, _) in zip(cl.terms, arrs):
-                sel = np.searchsorted(ids, cand)
-                freqs += tfs[sel]
-                plist = term_positions(cl.field, t)
-                pos_lists.append([plist[i] for i in sel])
+            cand, freqs, pos_lists = got
             matched = np.zeros(cand.size, dtype=bool)
             for j in range(cand.size):
                 lists = [pl[j] for pl in pos_lists]
@@ -281,10 +291,12 @@ def bucket_topk(
             if cand.size == 0:
                 return None
             return cand, w * _tf_norm(
-                freqs, dl_for(cl.field, cand), avgdl[cl.field]
+                freqs, view.doc_len(cl.field, cand), avgdl[cl.field]
             )
-        _, ids, tfs, _ = term_arrays(cl.field, cl.terms[0])
-        return ids, w * _tf_norm(tfs, dl_for(cl.field, ids), avgdl[cl.field])
+        ids, tfs = view.postings(cl.field, cl.terms[0])
+        return ids, w * _tf_norm(
+            tfs, view.doc_len(cl.field, ids), avgdl[cl.field]
+        )
 
     # ---- pass 2: progressive essential evaluation + θ-driven split ----
     #
@@ -324,7 +336,7 @@ def bucket_topk(
             # need positions anyway → keep them essential
             nonessential.append(i)
             continue
-        got = eval_clause(descs[i][1], descs[i][2])
+        got = eval_clause(descs[i][1])
         if got is None:
             continue
         ids, c = got
@@ -369,8 +381,8 @@ def bucket_topk(
             ub_c = np.zeros(cand_ids.size)
             row_probes = []
             for r in rl:
-                blast = varint_decode(r["block_last"]).astype(np.int64)
-                bmax = varint_decode(r["block_maxtf"]).astype(np.float64)
+                blast = varint_decode(col["block_last"][r]).astype(np.int64)
+                bmax = varint_decode(col["block_maxtf"][r]).astype(np.float64)
                 bj = np.searchsorted(blast, cand_ids)  # cand → block idx
                 in_range = bj < blast.size
                 ub_r = np.zeros(cand_ids.size)
@@ -395,22 +407,22 @@ def bucket_topk(
         PRUNE_STATS["cands_skipped"] += int((~alive).sum())
         for field, w, row_probes in probes:
             for bj, ub_r, r in row_probes:
-                PRUNE_STATS["blocks_total"] += int(r["n_blocks"])
+                PRUNE_STATS["blocks_total"] += int(col["n_blocks"][r])
                 sub = np.flatnonzero(alive & (ub_r > 0))
                 if sub.size == 0:
                     continue
-                doffs = varint_decode(r["block_doc_off"]).astype(np.int64)
-                toffs = varint_decode(r["block_tf_off"]).astype(np.int64)
+                doffs = varint_decode(col["block_doc_off"][r]).astype(np.int64)
+                toffs = varint_decode(col["block_tf_off"][r]).astype(np.int64)
                 needed = np.unique(bj[sub])
                 PRUNE_STATS["blocks_decoded"] += int(needed.size)
                 for j in needed:
                     in_j = sub[bj[sub] == j]
                     ids_j = decode_doc_block(
-                        r["doc_ids"], doffs, int(j)
+                        col["doc_ids"][r], doffs, int(j)
                     ).astype(np.int64)
-                    tfs_j = decode_tf_block(r["tfs"], toffs, int(j)).astype(
-                        np.float64
-                    )
+                    tfs_j = decode_tf_block(
+                        col["tfs"][r], toffs, int(j)
+                    ).astype(np.float64)
                     pos = np.searchsorted(ids_j, cand_ids[in_j])
                     pos_c = np.minimum(pos, ids_j.size - 1)
                     hit = ids_j[pos_c] == cand_ids[in_j]
@@ -419,15 +431,18 @@ def bucket_topk(
                     hit_idx = in_j[hit]
                     freq = tfs_j[pos_c[hit]]
                     scores[hit_idx] += w * _tf_norm(
-                        freq, dl_for(field, cand_ids[hit_idx]), avgdl[field]
+                        freq,
+                        view.doc_len(field, cand_ids[hit_idx]),
+                        avgdl[field],
                     )
         # drop candidates that could never reach θ (their score is partial)
         if scores.size > k:
             cand_ids, scores = cand_ids[alive], scores[alive]
 
-    if redirect_ids.size:
-        keep = ~np.isin(cand_ids, redirect_ids, assume_unique=True)
-        cand_ids, scores = cand_ids[keep], scores[keep]
+    for excluded in (view.redirects, view.deleted):
+        if excluded.size:
+            keep = ~np.isin(cand_ids, excluded, assume_unique=True)
+            cand_ids, scores = cand_ids[keep], scores[keep]
     if after is not None:
         # search-after cursor: keep only docs after (s, d) in (score desc,
         # doc_id asc) order. MaxScore stays ON — θ was seeded exclusively
@@ -476,8 +491,12 @@ def term_in(terms):
     where ``F.col("term").isin(terms)`` makes one py4j literal per term.
     Pushes down as the same parquet ``In`` filter. Quote, backslash and
     ``$`` (variable substitution) are written as ``\\uXXXX`` escapes, so
-    an unanalysed term (an ES ``term`` leaf) matches itself."""
+    an unanalysed term (an ES ``term`` leaf) matches itself. No terms
+    match no rows, as with ``isin([])``."""
     from pyspark.sql import functions as F
+
+    if not terms:
+        return F.lit(False)
 
     def lit(t: str) -> str:
         return "'" + "".join(
@@ -708,8 +727,6 @@ def compile_extended(
     identical term sets. Weights mirror execute_extended exactly:
     boost·idf (term), boost·Σ-member-idf (phrase), plain boost (const —
     Lucene's constant-score rewrite)."""
-    from pyspark.sql import functions as F
-
     from fuzzy_wiki_spark.operators.topk import idf
     from fuzzy_wiki_spark.plans.qlang import _expansion, atom_terms
 
@@ -717,9 +734,7 @@ def compile_extended(
     all_lit = sorted({t for ts in lit.values() for t in ts})
     df_map = {
         (r["field"], r["term"]): r["df"]
-        for r in term_stats_df.where(
-            F.col("term").isin(all_lit)
-        ).collect()
+        for r in term_stats_df.where(term_in(all_lit)).collect()
     } if all_lit else {}
 
     specs: list[AtomSpec] = []
@@ -770,103 +785,31 @@ def extended_bucket_topk(
     n_must: int,
 ) -> pd.DataFrame:
     """Evaluate every atom against one bucket's segment rows → local top-k
-    (doc_id, score). Tombstoned docs (META_DELETED) are excluded; redirect
-    docs are NOT (matching the relational term_postings adapter policy —
+    (doc_id, score), through the same ``BucketView`` as bucket_topk.
+    Tombstoned docs (``view.deleted``) are excluded; redirect docs are NOT
+    (matching the relational term_postings adapter policy —
     indexed-but-filtered is the searcher's O22 concern, not the query
     language's)."""
     from fuzzy_wiki_spark.oracle import sloppy_phrase_match
 
-    rows: dict[tuple[str, str], list[dict]] = {}
-    dl_parts: dict[str, list[tuple[np.ndarray, np.ndarray]]] = {}
-    del_parts: list[np.ndarray] = []
-    for r in seg_pdf.to_dict("records"):
-        if r["term"] == META_DL:
-            dl_parts.setdefault(r["field"], []).append(
-                (
-                    delta_decode_blocked(r["doc_ids"], BLOCK).astype(np.int64),
-                    decode_tfs(r["tfs"]).astype(np.float64),
-                )
-            )
-        elif r["term"] == META_DELETED:
-            del_parts.append(
-                delta_decode_blocked(r["doc_ids"], BLOCK).astype(np.int64)
-            )
-        elif r["term"] == META_REDIRECT:
-            continue
-        else:
-            rows.setdefault((r["field"], r["term"]), []).append(r)
-    dl_map: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    for f, parts in dl_parts.items():
-        if len(parts) == 1:
-            dl_map[f] = parts[0]
-        else:
-            ids = np.concatenate([p[0] for p in parts])
-            dls = np.concatenate([p[1] for p in parts])
-            o = np.argsort(ids, kind="stable")
-            dl_map[f] = (ids[o], dls[o])
-    deleted = (
-        np.unique(np.concatenate(del_parts))
-        if del_parts
-        else np.empty(0, dtype=np.int64)
-    )
-
-    arr_cache: dict = {}
-
-    def term_arrays(field, term):
-        key = (field, term)
-        if key in arr_cache:
-            return arr_cache[key]
-        rlist = rows.get(key)
-        if rlist is None:
-            arr_cache[key] = None
-            return None
-        ids = np.concatenate(
-            [
-                delta_decode_blocked(r["doc_ids"], BLOCK).astype(np.int64)
-                for r in rlist
-            ]
-        )
-        tfs = np.concatenate(
-            [decode_tfs(r["tfs"]).astype(np.float64) for r in rlist]
-        )
-        order = np.argsort(ids, kind="stable") if len(rlist) > 1 else None
-        if order is not None:
-            ids, tfs = ids[order], tfs[order]
-        arr_cache[key] = (rlist, ids, tfs, order)
-        return arr_cache[key]
-
-    def term_positions(field, term):
-        rlist, _, _, order = term_arrays(field, term)
-        plists: list[np.ndarray] = []
-        for r in rlist:
-            plists.extend(
-                p.astype(np.int64)
-                for p in decode_positions(r["pos_lens"], r["positions"])
-            )
-        if order is not None:
-            plists = [plists[i] for i in order]
-        return plists
-
-    def dl_for(field, ids):
-        all_ids, dls = dl_map[field]
-        return dls[np.searchsorted(all_ids, ids)]
+    view = BucketView(seg_pdf)
 
     def eval_atom(spec: AtomSpec):
         """→ (sorted unique doc_ids, contrib array) or None (no match)."""
         if spec.kind == "term":
-            got = term_arrays(spec.field, spec.terms[0])
+            got = view.postings(spec.field, spec.terms[0])
             if got is None:
                 return None
-            _, ids, tfs, _ = got
+            ids, tfs = got
             return ids, spec.weight * _tf_norm(
-                tfs, dl_for(spec.field, ids), avgdl[spec.field]
+                tfs, view.doc_len(spec.field, ids), avgdl[spec.field]
             )
         if spec.kind == "const":
             parts = []
             for t in spec.terms:
-                got = term_arrays(spec.field, t)
+                got = view.postings(spec.field, t)
                 if got is not None:
-                    parts.append(got[1])
+                    parts.append(got[0])
             if not parts:
                 return None
             ids = np.unique(np.concatenate(parts))
@@ -875,29 +818,20 @@ def extended_bucket_topk(
         # distinct terms; match via the pinned pure-python sloppy matcher
         # (identical spec to execute_extended's _sloppy_udf)
         distinct = tuple(dict.fromkeys(spec.terms))
-        arrs = [term_arrays(spec.field, t) for t in distinct]
-        if any(a is None for a in arrs):
+        got = view.phrase_candidates(spec.field, distinct)
+        if got is None:
             return None
-        cand = arrs[0][1]
-        for a in arrs[1:]:
-            cand = cand[np.isin(cand, a[1], assume_unique=True)]
-        if cand.size == 0:
-            return None
-        freqs = np.zeros(cand.size)
-        posmaps: list[tuple[str, list]] = []
-        for t, (_, ids, tfs, _) in zip(distinct, arrs):
-            sel = np.searchsorted(ids, cand)
-            freqs += tfs[sel]
-            plist = term_positions(spec.field, t)
-            posmaps.append((t, [plist[i] for i in sel]))
+        cand, freqs, pos_lists = got
         matched = np.zeros(cand.size, dtype=bool)
         for j in range(cand.size):
-            pos = {t: pl[j].tolist() for t, pl in posmaps}
+            pos = {t: pl[j].tolist() for t, pl in zip(distinct, pos_lists)}
             matched[j] = sloppy_phrase_match(pos, list(spec.terms), spec.slop)
         cand, freqs = cand[matched], freqs[matched]
         if cand.size == 0:
             return None
-        pfn = _tf_norm(freqs, dl_for(spec.field, cand), avgdl[spec.field])
+        pfn = _tf_norm(
+            freqs, view.doc_len(spec.field, cand), avgdl[spec.field]
+        )
         return cand, spec.weight * pfn
 
     results = [(s, eval_atom(s)) for s in specs]
@@ -926,8 +860,8 @@ def extended_bucket_topk(
     for s, got in results:
         if s.role == "veto" and got is not None:
             cand = cand[~np.isin(cand, got[0], assume_unique=True)]
-    if deleted.size:
-        cand = cand[~np.isin(cand, deleted, assume_unique=True)]
+    if view.deleted.size:
+        cand = cand[~np.isin(cand, view.deleted, assume_unique=True)]
     if cand.size == 0:
         return _EMPTY.copy()
     scores = np.zeros(cand.size)

@@ -61,7 +61,16 @@ from fuzzy_wiki_spark.codec import (
 )
 
 BLOCK = 128
-META_TERMS = ["_dl", "_redirect", "_deleted"]  # meta rows (segment_query.py)
+# meta rows, encoded like postings and read by segment_query.BucketView:
+# per-field doc lengths, redirect docs (O22 filter), and tombstones
+# (streaming/incremental.py delete_docs). Tombstoned docs are dropped from
+# results; they and their marker are physically removed at compaction.
+# Stats (df/doc_count/avgdl) keep counting them until then, which is
+# Lucene's deletes-until-merge semantics.
+META_DL = "_dl"
+META_REDIRECT = "_redirect"
+META_DELETED = "_deleted"
+META_TERMS = [META_DL, META_REDIRECT, META_DELETED]
 
 SEGMENTS_SCHEMA_DDL = (
     "bucket int, field string, term string, df int, sum_tf long, "
@@ -456,7 +465,7 @@ def build_index_segments(
         .select(
             "doc_id",
             "field",
-            F.lit("_dl").alias("term"),
+            F.lit(META_DL).alias("term"),
             F.col("dl").alias("tf"),
             empty_pos.alias("positions"),
             "dl",
@@ -469,7 +478,7 @@ def build_index_segments(
         red = docs_meta.where(F.col("is_redirect")).select(
             "doc_id",
             F.lit("content").alias("field"),
-            F.lit("_redirect").alias("term"),
+            F.lit(META_REDIRECT).alias("term"),
             F.lit(1).alias("tf"),
             empty_pos.alias("positions"),
             F.lit(0).alias("dl"),

@@ -14,7 +14,8 @@ Spark-first:
   multiprocessing; here the scheduler owns that);
 - first-revision selection is ``revision[0]`` on the parsed array
   (element order is preserved by the reader — pinned in
-  tests/test_xml_dump.py);
+  tests/test_xml_dump.py); a single-revision dump, which the reader
+  parses as a struct, is wrapped into a one-element array first;
 - markup stripping is a chain of JVM-side ``regexp_replace`` Columns —
   whole-stage-codegen scan speed, zero Python in the path. The strip
   subset mirrors strip_code's visible behavior: HTML comments,
@@ -35,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 TEMPLATE_DEPTH = 4
 """Maximum template nesting removed by the iterated innermost-first
@@ -76,14 +78,21 @@ def read_mediawiki_dump(
     ``first_rev.id`` — the REVISION id — as "id"); the page-level id is
     kept as ``wiki_page_id`` for callers that want the page key.
     """
-    pages = (
-        spark.read.format("xml")
-        .option("rowTag", "page")
-        .load(path)
-        .where(F.size(F.col("revision")) >= 1)
-    )
-    first = F.col("revision")[0]
+    pages = spark.read.format("xml").option("rowTag", "page").load(path)
+    # the reader infers a struct, not an array, when every page has one
+    # <revision> (a real pages-articles dump), and a struct<_VALUE, ...>
+    # text when <text> carries attributes (bytes, xml:space)
+    rev_type = pages.schema["revision"].dataType
+    revision = F.col("revision")
+    if isinstance(rev_type, ArrayType):
+        rev_type = rev_type.elementType
+    else:
+        revision = F.when(revision.isNotNull(), F.array(revision))
+    pages = pages.where(F.size(revision) >= 1)
+    first = revision[0]
     text = first["text"]
+    if isinstance(rev_type["text"].dataType, StructType):
+        text = text["_VALUE"]
     if strip_markup:
         text = strip_wiki_markup(text)
     return pages.select(

@@ -123,9 +123,9 @@ def delete_docs(
     Writes a generation containing ONLY ``_deleted`` meta rows (the same
     encoded segment layout; ``bucket = doc_id % n_buckets`` must match the
     index's bucketing so the marker lands with its doc's postings). The
-    scorer unions tombstones into its exclusion set at decode time
-    (segment_query.py META_DELETED), so deletes take effect at the next
-    query with zero query-path cost beyond the marker rows. Stats keep
+    scorers drop tombstoned docs at decode time (segment_query.BucketView
+    ``deleted``), so deletes take effect at the next query with zero
+    query-path cost beyond the marker rows. Stats keep
     counting deleted docs until compaction — Lucene's deletes-until-merge
     semantics — and ``compact_generations`` physically drops both the
     postings and the markers.
@@ -175,7 +175,7 @@ def open_incremental(spark: SparkSession, out_dir: str):
     ``_dl`` meta-row METADATA (df = docs, sum_tf = Σdl — no posting
     decode). Both are exact because generations hold disjoint doc sets.
     The returned index's search path handles the duplicate
-    (bucket, field, term) rows by k-way merge (segment_query.bucket_topk),
+    (bucket, field, term) rows by k-way merge (segment_query.BucketView),
     so an incremental index is searchable WITHOUT compaction — compaction
     is a read-amplification optimization, not a correctness requirement."""
     from fuzzy_wiki_spark.engine import SegmentIndex

@@ -110,3 +110,43 @@ def test_delete_gen_is_pure_markers(spark, out):
     assert {r.term for r in del_gen.select("term").distinct().collect()} == {
         "_deleted"
     }
+
+
+def test_exclusion_policy_per_kernel(spark, tmp_path):
+    """On one tombstoned generation union, the extended-query kernel drops
+    tombstoned docs only (redirects are the searcher's filter, not the
+    query language's) and agrees with the relational path; BM25 search
+    drops both."""
+    d = str(tmp_path / "ix")
+    docs = spark.createDataFrame(
+        pd.DataFrame(
+            [
+                (0, "merge join key"),
+                (1, "REDIRECT merge join"),
+                (2, "merge sort join"),
+                (3, "join fast"),
+            ],
+            columns=["doc_id", "content"],
+        )
+    )
+    for epoch in range(2):
+        append_batch(
+            spark, docs.where(F.col("doc_id") % 2 == epoch), epoch, d,
+            n_buckets=2, mode="simple", fields={"content": "content"},
+        )
+    delete_docs(spark, [2], "del-0", d, n_buckets=2)
+    idx = open_incremental(spark, d)
+    q = "merge join"
+
+    def hits(df):
+        return {
+            (r.doc_id, r.s)
+            for r in df.select("doc_id", F.round("score", 6).alias("s"))
+            .collect()
+        }
+
+    ext = hits(idx.extended(q, analyze=str.split))
+    assert {doc for doc, _ in ext} == {0, 1, 3}
+    assert ext == hits(idx.extended(q, analyze=str.split, relational=True))
+    bm25 = {r.doc_id for r in idx.search_many([q], k=10).collect()}
+    assert bm25 == {0, 3}

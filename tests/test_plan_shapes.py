@@ -421,3 +421,27 @@ def test_term_in_matches_isin_and_pushes_down(spark, tmp_path):
     assert re.search(
         r"PushedFilters: \[[^\]]*In\(term, ", _plan(df.where(term_in(terms)))
     )
+    # a call site: SegmentIndex.term_postings over a segment table
+    import numpy as np
+    import pandas as pd
+
+    from fuzzy_wiki_spark.engine import SegmentIndex
+    from fuzzy_wiki_spark.operators.segments import encode_group
+
+    seg = pd.DataFrame(
+        [
+            dict(
+                encode_group(np.array([i]), np.array([1]), [np.array([0])]),
+                field="content",
+                term=t,
+            )
+            for i, t in rows
+        ]
+    )
+    spark.createDataFrame(seg).write.parquet(str(tmp_path / "seg"))
+    idx = SegmentIndex.from_parts(
+        spark, spark.read.parquet(str(tmp_path / "seg")), None, {}
+    )
+    posts = idx.term_postings("content", terms, with_dl=False)
+    assert sorted((r.doc_id, r.term) for r in posts.collect()) == want
+    assert re.search(r"PushedFilters: \[[^\]]*In\(term, ", _plan(posts))

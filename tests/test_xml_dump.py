@@ -75,3 +75,30 @@ def test_strip_column_cases(spark):
     ).collect()
     for r in got:
         assert r.got == r.want, (r.got, r.want)
+
+
+# a real pages-articles dump: one <revision> per page and attributes on
+# <text>, so the reader infers revision as a struct and text as
+# struct<_VALUE, _bytes, _xml:space>
+SINGLE_REVISION_DUMP = """<mediawiki>
+<page><title>Alpha</title><id>1</id>
+  <revision><id>101</id><text bytes="36" xml:space="preserve">'''Alpha''' is a [[thing|concept]].</text></revision>
+</page>
+<page><title>Empty</title><id>2</id></page>
+<page><title>Gamma</title><id>3</id>
+  <revision><id>301</id><text bytes="16" xml:space="preserve">plain {{t}} text</text></revision>
+</page>
+</mediawiki>"""
+
+
+def test_single_revision_dump_with_text_attributes(spark, tmp_path):
+    p = tmp_path / "single.xml"
+    p.write_text(SINGLE_REVISION_DUMP)
+    out = {
+        r.page_id: (r.wiki_page_id, r.title, r.text)
+        for r in read_mediawiki_dump(spark, str(p)).collect()
+    }
+    assert out == {
+        101: (1, "Alpha", "Alpha is a concept."),
+        301: (3, "Gamma", "plain  text"),
+    }
