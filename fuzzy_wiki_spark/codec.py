@@ -235,13 +235,14 @@ def encode_position_list(positions) -> bytes:
 
 def positions_by_term(tps) -> dict:
     """{term: [absolute positions]} from one candidate row's
-    ``collect_list(struct(term, positions))`` — the shared decode step of
-    every positional matcher (sloppy phrase, ordered span, phrase-count
-    rescore). Multi-generation inputs may carry SEVERAL rows per term
-    (one per generation, disjoint doc sets per the append-only contract);
-    within one doc that still means one row per (term, generation), and
-    extend() concatenates them. Callers needing sorted positions sort the
-    lists themselves (single-row inputs arrive sorted from the encoder)."""
+    ``collect_list(struct(term, positions))`` — the per-row decode step
+    of the span matchers (the phrase kernel decodes a whole batch at
+    once, operators/phrase.py). Multi-generation inputs may carry SEVERAL
+    rows per term (one per generation, disjoint doc sets per the
+    append-only contract); within one doc that still means one row per
+    (term, generation), and extend() concatenates them. Callers needing
+    sorted positions sort the lists themselves (single-row inputs arrive
+    sorted from the encoder)."""
     posmap: dict = {}
     for tp in tps:
         posmap.setdefault(tp["term"], []).extend(
@@ -255,6 +256,22 @@ def decode_position_list(buf: bytes) -> np.ndarray:
     delta-encoded after) → absolute positions. The per-posting mirror of
     the map-side encode in postings.py."""
     return np.cumsum(varint_decode(buf), dtype=np.uint64)
+
+
+def decode_position_runs(lens: np.ndarray, buf) -> np.ndarray:
+    """Decode consecutive postings' positions in one pass: ``buf`` holds
+    one run of varint gaps per posting (each run's first value absolute,
+    as :func:`decode_position_list` reads one), ``lens`` the number of
+    values in each run. → flat absolute positions, run after run."""
+    deltas = varint_decode(buf)
+    if deltas.size == 0:
+        return np.empty(0, dtype=np.uint64)
+    nz = lens > 0
+    starts = (np.concatenate(([0], np.cumsum(lens)))[:-1])[nz]
+    cs = np.cumsum(deltas)
+    # per-run reset: true[i] = cs[i] - cs[start(i)] + deltas[start(i)]
+    base = cs[starts] - deltas[starts]
+    return cs - np.repeat(base, lens[nz])
 
 
 def varint_value_counts(buf, bounds: np.ndarray) -> np.ndarray:

@@ -144,9 +144,8 @@ def _explain_factors(
     term-pruned segment decode both qualify). Returns (clause_id, field,
     kind, terms, weight, freq, dl, tf_norm, contrib) tuples;
     sum(contrib) == the doc's search() score."""
-    from fuzzy_wiki_spark.codec import decode_position_list
+    from fuzzy_wiki_spark.operators.phrase import row_matches
     from fuzzy_wiki_spark.operators.topk import idf as _idf
-    from fuzzy_wiki_spark.oracle import sloppy_phrase_match
 
     by_ft = {(r["field"], r["term"]): r for r in rows}
     out = []
@@ -159,21 +158,14 @@ def _explain_factors(
         hit = [by_ft.get((cl.field, t)) for t in cl.terms]
         dl = next((int(r["dl"]) for r in hit if r is not None), 0)
         if cl.is_phrase and len(cl.terms) > 1:
-            if any(r is None for r in hit):
-                freq = 0.0
-            else:
-                # positions ride both schemas in WIRE format (varint
-                # delta-gap bytes) — decode to absolute ints before the
-                # matcher, exactly as the distributed scorers do
-                pos = {
-                    t: decode_position_list(r["positions"]).tolist()
-                    for t, r in zip(cl.terms, hit)
-                }
-                freq = (
-                    float(sum(int(r["tf"]) for r in hit))
-                    if sloppy_phrase_match(pos, cl.terms, cl.slop)
-                    else 0.0
-                )
+            # the doc's rows as one relational candidate row: positions
+            # stay in wire format for the shared phrase kernel
+            matched = not any(r is None for r in hit) and row_matches(
+                [[by_ft[(cl.field, t)] for t in set(cl.terms)]],
+                [cl.terms],
+                [cl.slop],
+            )[0]
+            freq = float(sum(int(r["tf"]) for r in hit)) if matched else 0.0
         else:
             freq = float(hit[0]["tf"]) if hit[0] is not None else 0.0
         tfn = (
@@ -564,9 +556,8 @@ class InvertedIndex:
 
         The data touched is |query terms| postings rows of ONE doc — a
         point lookup — so the factor math runs driver-side on the
-        collected rows (_explain_factors: phrase freq via the pinned
-        pure-Python sloppy matcher, oracle.py:sloppy_phrase_match — the
-        same spec the distributed scorers reproduce)."""
+        collected rows (_explain_factors: phrase freq via the same phrase
+        kernel the distributed scorers run, operators/phrase.py)."""
         clauses = compile_query(query)
         all_terms = sorted({t for c in clauses for t in c.terms})
         term_df = self.lookup_term_df(all_terms)

@@ -26,6 +26,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fuzzy_wiki_spark.operators.phrase import row_matches
+from fuzzy_wiki_spark.operators.topk import docs_with_all
+
 
 def rescore_topk(
     scored: DataFrame,
@@ -65,25 +68,9 @@ def phrase_count_batch(tp_col: pd.Series, phrase_col: pd.Series) -> pd.Series:
     (a {term, positions} struct list from one collect_list), the number
     of positions p with p+i ∈ positions(term_i) for every phrase member —
     the PhraseQuery freq a rescorer uses, not the reference's
-    member-tf-sum (O17) semantics."""
-    import numpy as np
-
-    from fuzzy_wiki_spark.codec import positions_by_term
-
-    out = []
-    for tps, phrase in zip(tp_col, phrase_col):
-        posmap = positions_by_term(tps)
-        lists = [posmap.get(t) for t in phrase]
-        if any(not pl for pl in lists):
-            out.append(0)
-            continue
-        anchors = np.asarray(lists[0], dtype=np.int64)
-        ok = np.ones(anchors.size, dtype=bool)
-        for i in range(1, len(lists)):
-            li = np.asarray(lists[i], dtype=np.int64)
-            ok &= np.isin(anchors + i, li)
-        out.append(int(ok.sum()))
-    return pd.Series(out)
+    member-tf-sum (O17) semantics. That is the phrase kernel's count of
+    anchors costing 0 at slop 0 (operators/phrase.py)."""
+    return pd.Series(row_matches(tp_col, phrase_col, [0] * len(tp_col)))
 
 
 _phrase_count_udf = F.pandas_udf(phrase_count_batch, T.IntegerType())
@@ -106,17 +93,7 @@ def phrase_occurrences(
         scan = scan.join(
             F.broadcast(candidates.select("doc_id")), "doc_id", "left_semi"
         )
-    grouped = (
-        scan.groupBy("doc_id")
-        .agg(
-            F.collect_list(
-                F.struct(F.col("term"), F.col("positions"))
-            ).alias("mtps"),
-            F.countDistinct("term").alias("n_found"),
-        )
-        .where(F.col("n_found") == len(set(phrase)))
-    )
-    return grouped.select(
+    return docs_with_all(scan, phrase).select(
         "doc_id",
         _phrase_count_udf(
             F.col("mtps"), F.array(*[F.lit(t) for t in phrase])

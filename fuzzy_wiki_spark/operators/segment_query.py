@@ -23,8 +23,9 @@ vectorized numpy over decoded arrays:
   redirect and tombstone sets from ``_redirect``/``_deleted``; each kernel
   applies its own exclusion policy to them,
 - term-clause contributions via searchsorted joins,
-- sloppy-phrase via the anchor-min matcher (positions decoded lazily, only
-  for docs containing ALL phrase terms),
+- sloppy-phrase via the shared phrase kernel (operators/phrase.py):
+  positions are decoded lazily into one flat array per (field, term), and
+  only the docs containing ALL phrase terms reach the kernel,
 - **MaxScore pruning** (WAND family, bounds from the stored block-max/max_tf
   metadata): score the highest-upper-bound clause first → θ = its k-th best
   partial score (a valid lower bound on the final k-th score); clauses whose
@@ -46,6 +47,7 @@ import math
 import re
 from collections.abc import Iterator
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -64,6 +66,7 @@ from fuzzy_wiki_spark.operators.segments import (
     META_REDIRECT,
     decode_positions,
 )
+from fuzzy_wiki_spark.operators.phrase import phrase_costs
 from fuzzy_wiki_spark.plans.query import B, K1, Clause
 
 # hive-style partition directory of one bucket in a written segment table
@@ -89,6 +92,13 @@ _EMPTY = pd.DataFrame({"doc_id": [], "score": []}).astype(
 # per-process decode accounting (tests + bench read this after driver-side
 # calls; on executors it's worker-local and unused)
 PRUNE_STATS = {"blocks_decoded": 0, "blocks_total": 0, "cands_skipped": 0}
+
+
+def _runs(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Indices of the ranges [starts[j], starts[j] + lens[j]), in order."""
+    return np.repeat(starts - np.cumsum(lens) + lens, lens) + np.arange(
+        lens.sum()
+    )
 
 
 class BucketView:
@@ -164,44 +174,56 @@ class BucketView:
         got = self._arrays[key]
         return None if got is None else got[:2]
 
-    def positions(self, field: str, term: str) -> list[np.ndarray]:
-        """Per-posting position lists aligned with ``postings``' ids,
-        decoded on first use (only phrase matching pays for them)."""
+    def positions(self, field: str, term: str):
+        """→ (posting offsets, flat positions): posting j's positions are
+        ``flat[offs[j]:offs[j + 1]]``, aligned with ``postings``' ids.
+        Decoded on first use (only phrase matching pays for them)."""
         key = (field, term)
         if key not in self._positions:
             self.postings(field, term)
             order = self._arrays[key][2]
-            plists = [
-                p.astype(np.int64)
-                for i in self.rows[key]
-                for p in decode_positions(
+            lens, flat = map(np.concatenate, zip(*(
+                decode_positions(
                     self.cols["pos_lens"][i], self.cols["positions"][i]
                 )
-            ]
-            self._positions[key] = (
-                plists if order is None else [plists[j] for j in order]
-            )
+                for i in self.rows[key]
+            )))
+            offs = np.concatenate(([0], np.cumsum(lens)))
+            if order is not None:
+                flat = flat[_runs(offs[order], lens[order])]
+                offs = np.concatenate(([0], np.cumsum(lens[order])))
+            self._positions[key] = offs, flat.astype(np.int64)
         return self._positions[key]
 
-    def phrase_candidates(self, field: str, terms):
-        """Docs holding every term → (sorted doc ids, Σ tf over ``terms``,
-        one list per term of the docs' position arrays), or None."""
-        arrs = [self.postings(field, t) for t in terms]
-        if any(a is None for a in arrs):
+    def phrase_candidates(self, field: str, terms, slop: int):
+        """Docs where the phrase ``terms`` matches within ``slop`` →
+        (sorted doc ids, {distinct term: aligned tfs}), or None. Each
+        term's positions for the docs holding every term go to the
+        phrase kernel as one flat (candidate, position) pair."""
+        arrs = {t: self.postings(field, t) for t in dict.fromkeys(terms)}
+        if any(a is None for a in arrs.values()):
             return None
-        cand = arrs[0][0]
-        for ids, _ in arrs[1:]:
-            cand = cand[np.isin(cand, ids, assume_unique=True)]
+        cand = reduce(
+            lambda a, b: a[np.isin(a, b, assume_unique=True)],
+            (ids for ids, _ in arrs.values()),
+        )
         if cand.size == 0:
             return None
-        freqs = np.zeros(cand.size)
-        pos_lists = []
-        for t, (ids, tfs) in zip(terms, arrs):
+        tfs, flat = {}, {}
+        for t, (ids, tf) in arrs.items():
             sel = np.searchsorted(ids, cand)
-            freqs += tfs[sel]
-            plist = self.positions(field, t)
-            pos_lists.append([plist[i] for i in sel])
-        return cand, freqs, pos_lists
+            tfs[t] = tf[sel]
+            offs, pos = self.positions(field, t)
+            lens = offs[sel + 1] - offs[sel]
+            flat[t] = (
+                np.repeat(np.arange(cand.size), lens),
+                pos[_runs(offs[sel], lens)],
+            )
+        hit = np.zeros(cand.size, dtype=bool)
+        hit[flat[terms[0]][0][phrase_costs(flat, terms, slop) <= slop]] = True
+        if not hit.any():
+            return None
+        return cand[hit], {t: tf[hit] for t, tf in tfs.items()}
 
     def doc_len(self, field: str, ids: np.ndarray) -> np.ndarray:
         all_ids, dls = self.dl[field]
@@ -273,29 +295,15 @@ def bucket_topk(
         """Full evaluation → (sorted doc_ids, contribution)."""
         w = weights[cl.clause_id]
         if cl.is_phrase and len(cl.terms) > 1:
-            got = view.phrase_candidates(cl.field, cl.terms)
+            got = view.phrase_candidates(cl.field, cl.terms, cl.slop)
             if got is None:
                 return None
-            cand, freqs, pos_lists = got
-            matched = np.zeros(cand.size, dtype=bool)
-            for j in range(cand.size):
-                lists = [pl[j] for pl in pos_lists]
-                bases = lists[0]
-                cost = np.zeros(bases.size, dtype=np.int64)
-                for i in range(1, len(lists)):
-                    cost += np.abs(
-                        lists[i][None, :] - (bases + i)[:, None]
-                    ).min(axis=1)
-                matched[j] = bool((cost <= cl.slop).any())
-            cand, freqs = cand[matched], freqs[matched]
-            if cand.size == 0:
-                return None
-            return cand, w * _tf_norm(
-                freqs, view.doc_len(cl.field, cand), avgdl[cl.field]
-            )
-        ids, tfs = view.postings(cl.field, cl.terms[0])
+            ids, tfs = got
+            freq = sum(tfs[t] for t in cl.terms)  # Σ member tf (O17)
+        else:
+            ids, freq = view.postings(cl.field, cl.terms[0])
         return ids, w * _tf_norm(
-            tfs, view.doc_len(cl.field, ids), avgdl[cl.field]
+            freq, view.doc_len(cl.field, ids), avgdl[cl.field]
         )
 
     # ---- pass 2: progressive essential evaluation + θ-driven split ----
@@ -790,20 +798,10 @@ def extended_bucket_topk(
     (matching the relational term_postings adapter policy —
     indexed-but-filtered is the searcher's O22 concern, not the query
     language's)."""
-    from fuzzy_wiki_spark.oracle import sloppy_phrase_match
-
     view = BucketView(seg_pdf)
 
     def eval_atom(spec: AtomSpec):
         """→ (sorted unique doc_ids, contrib array) or None (no match)."""
-        if spec.kind == "term":
-            got = view.postings(spec.field, spec.terms[0])
-            if got is None:
-                return None
-            ids, tfs = got
-            return ids, spec.weight * _tf_norm(
-                tfs, view.doc_len(spec.field, ids), avgdl[spec.field]
-            )
         if spec.kind == "const":
             parts = []
             for t in spec.terms:
@@ -814,25 +812,19 @@ def extended_bucket_topk(
                 return None
             ids = np.unique(np.concatenate(parts))
             return ids, np.full(ids.size, spec.weight)
-        # phrase: docs containing ALL distinct terms; freq = Σ tf over the
-        # distinct terms; match via the pinned pure-python sloppy matcher
-        # (identical spec to execute_extended's _sloppy_udf)
-        distinct = tuple(dict.fromkeys(spec.terms))
-        got = view.phrase_candidates(spec.field, distinct)
+        if spec.kind == "term":
+            got = view.postings(spec.field, spec.terms[0])
+        else:
+            # phrase: freq = Σ tf over the distinct terms (as
+            # execute_extended)
+            got = view.phrase_candidates(spec.field, spec.terms, spec.slop)
+            got = got and (got[0], sum(got[1].values()))
         if got is None:
             return None
-        cand, freqs, pos_lists = got
-        matched = np.zeros(cand.size, dtype=bool)
-        for j in range(cand.size):
-            pos = {t: pl[j].tolist() for t, pl in zip(distinct, pos_lists)}
-            matched[j] = sloppy_phrase_match(pos, list(spec.terms), spec.slop)
-        cand, freqs = cand[matched], freqs[matched]
-        if cand.size == 0:
-            return None
-        pfn = _tf_norm(
-            freqs, view.doc_len(spec.field, cand), avgdl[spec.field]
+        ids, freq = got
+        return ids, spec.weight * _tf_norm(
+            freq, view.doc_len(spec.field, ids), avgdl[spec.field]
         )
-        return cand, spec.weight * pfn
 
     results = [(s, eval_atom(s)) for s in specs]
     # candidate set: docs matching EVERY must atom (or any scoring atom

@@ -52,6 +52,7 @@ import pyarrow.compute as pc
 from fuzzy_wiki_spark.codec import (
     binary_col as _binary_col,
     block_offsets,
+    decode_position_runs,
     delta_encode_blocked,
     encode_tfs,
     varint_decode,
@@ -147,40 +148,13 @@ def encode_group(
     }
 
 
-def decode_positions_flat(
+def decode_positions(
     pos_lens_buf: bytes, pos_buf: bytes
 ) -> tuple[np.ndarray, np.ndarray]:
-    """→ (per-posting position counts, flat absolute positions) — the
-    segmented-cumsum decode without the per-posting split (consumers that
-    rebuild list columns want the flat stream + lengths directly)."""
+    """→ (per-posting position counts, flat absolute positions): one
+    segment row's positions, posting after posting."""
     lens = varint_decode(pos_lens_buf).astype(np.int64)
-    deltas = varint_decode(pos_buf)
-    if deltas.size == 0:
-        return lens, np.empty(0, dtype=np.uint64)
-    nz = lens > 0
-    starts = (np.concatenate(([0], np.cumsum(lens)))[:-1])[nz]
-    cs = np.cumsum(deltas)
-    # per-doc reset: true[i] = cs[i] - cs[start(i)] + deltas[start(i)]
-    base = cs[starts] - deltas[starts]
-    flat = cs - np.repeat(base, lens[nz])
-    return lens, flat
-
-
-def decode_positions(pos_lens_buf: bytes, pos_buf: bytes) -> list[np.ndarray]:
-    lens, flat = decode_positions_flat(pos_lens_buf, pos_buf)
-    if flat.size == 0:
-        return [np.empty(0, dtype=np.uint64) for _ in lens]
-    nz = lens > 0
-    bounds = np.cumsum(lens[nz])[:-1].astype(np.int64)
-    pieces = np.split(flat, bounds)
-    out, j = [], 0
-    for ln in lens:
-        if ln == 0:
-            out.append(np.empty(0, dtype=np.uint64))
-        else:
-            out.append(pieces[j])
-            j += 1
-    return out
+    return lens, decode_position_runs(lens, pos_buf)
 
 
 def encode_partition_table(tbl: pa.Table) -> pa.RecordBatch | None:

@@ -66,8 +66,9 @@ def _slot_lists(posmap: dict, slots) -> list[list[int]] | None:
 
 def _min_gap_ordered(lists: list[list[int]]) -> int:
     """Tightest ordered chain p_1 < p_2 < … < p_n choosing one position
-    per slot: gap = (p_n − p_1) − (n − 1); −1 if no chain. Same DP as
-    span_min_gap_batch (chain end → maximal feasible start)."""
+    per slot: gap = (p_n − p_1) − (n − 1); −1 if no chain. DP over the
+    lists: each chain end keeps its maximal feasible chain start (prefix
+    max over earlier ends). Also behind topk.span_min_gap_batch."""
     import bisect
 
     cur = {p: p for p in lists[0]}
@@ -91,7 +92,8 @@ def _min_gap_ordered(lists: list[list[int]]) -> int:
 
 def _min_cover_unordered(lists: list[list[int]]) -> int:
     """Minimal covering width max(p_i) − min(p_i) over one choice per
-    slot, any order — the k-sorted-lists sweep of span_cover_batch."""
+    slot, any order: the k-sorted-lists sweep (advance the minimum's
+    pointer). Also behind topk.span_cover_batch."""
     ptr = [0] * len(lists)
     best = 1 << 62
     while True:

@@ -313,33 +313,33 @@ def adjacency_counts_kernel(pair_keys: list[str]):
     suggester: per candidate doc row (collect_list of (term, positions)
     structs), count adjacent occurrences for every requested pair —
     c_row(a,b) = |{p : p ∈ L_a, p+1 ∈ L_b}| — returning one long per
-    pair. Built per query (the pair list is a query-sized literal closed
-    over by the kernel); the module-level ``pd`` import keeps the type
-    hints resolvable for pandas_udf."""
+    pair: the shared phrase kernel's exact count of the phrase (a, b)
+    (operators/phrase.py). Built per query (the pair list is a
+    query-sized literal closed over by the kernel); the module-level
+    ``pd`` import keeps the type hints resolvable for pandas_udf."""
     import pandas as pd  # noqa: F401 (resolves the kernel's type hints)
     from pyspark.sql import types as T
 
     _pairs = tuple(pair_keys)
 
     def _adj_counts(tp_col):
-        from fuzzy_wiki_spark.codec import positions_by_term
-
+        import numpy as np
         import pandas as pd
 
-        out = []
-        for tps in tp_col:
-            posmap = positions_by_term(tps)
-            row = []
-            for pk in _pairs:
-                a, b = pk.split("\x00")
-                la, lb = posmap.get(a), posmap.get(b)
-                if not la or not lb:
-                    row.append(0)
-                    continue
-                sb = set(lb)
-                row.append(sum(1 for p in la if p + 1 in sb))
-            out.append(row)
-        return pd.Series(out)
+        from fuzzy_wiki_spark.operators.phrase import (
+            anchor_counts,
+            row_positions,
+        )
+
+        flat = row_positions(tp_col)
+        n = len(tp_col)
+        cnts = [
+            anchor_counts(flat, tuple(pk.split("\x00")), 0, n)
+            for pk in _pairs
+        ]
+        return pd.Series(
+            list(np.stack(cnts, axis=1)) if cnts else [[]] * n
+        )
 
     return F.pandas_udf(_adj_counts, T.ArrayType(T.LongType()))
 

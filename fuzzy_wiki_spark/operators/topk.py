@@ -34,11 +34,24 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fuzzy_wiki_spark.codec import positions_by_term
+from fuzzy_wiki_spark.operators.phrase import (
+    anchor_counts,
+    row_groups,
+    row_matches,
+    row_positions,
+)
+from fuzzy_wiki_spark.operators.spans import (
+    _min_cover_unordered,
+    _min_gap_ordered,
+    _slot_lists,
+)
 from fuzzy_wiki_spark.plans.query import B, K1, Clause, compile_query
 
 
@@ -57,53 +70,31 @@ def sloppy_match_batch(
     not guarantee that two collect_lists in the same agg see rows in the
     same order; SURVEY.md §7 item 5).
 
-    Pinned spec (== oracle.sloppy_phrase_match): match iff ∃ distinct
-    positions p_i of term_i with Σ|p_i − (p_1 + i)| ≤ slop.
-
-    Fast exact path: when the phrase's terms are pairwise distinct, their
-    occurrence-position lists are disjoint (one token per position), so the
-    distinctness constraint is automatic and, for a fixed anchor p_1 = base,
-    each term minimizes |p_i − (base+i)| independently:
-        cost(base) = Σ_i min_{p∈L_i} |p − (base + i)|
-    evaluated for every base ∈ L_1 with one numpy broadcast — O(|L_1|·Σ|L_i|)
-    instead of the brute-force O(Π|L_i|). Phrases with repeated terms fall
-    back to the combinatorial check (rare, and oracle-equivalent)."""
-    import numpy as np
-    from itertools import product as iproduct
-
-    from fuzzy_wiki_spark.codec import positions_by_term
-
-    out = []
-    for tps, phrase, slop in zip(tp_col, phrase_col, slop_col):
-        # positions ride the postings schema in wire format (varint
-        # delta bytes, postings.py) — decode per candidate row only
-        posmap = positions_by_term(tps)
-        lists = [posmap.get(t) for t in phrase]
-        if any(not pl for pl in lists):
-            out.append(False)
-            continue
-        if len(set(phrase)) == len(phrase):
-            bases = np.asarray(lists[0], dtype=np.int64)
-            cost = np.zeros(bases.size, dtype=np.int64)
-            for i in range(1, len(lists)):
-                li = np.asarray(lists[i], dtype=np.int64)
-                # min over occurrences of |p - (base + i)| per base
-                cost += np.abs(li[None, :] - (bases + i)[:, None]).min(axis=1)
-            out.append(bool((cost <= slop).any()))
-            continue
-        matched = False
-        for combo in iproduct(*lists):
-            if len(set(combo)) != len(combo):
-                continue
-            base = combo[0]
-            if sum(abs(p - (base + i)) for i, p in enumerate(combo)) <= slop:
-                matched = True
-                break
-        out.append(matched)
-    return pd.Series(out)
+    A row matches iff some anchor's phrase cost is ≤ its slop: the batch
+    goes through the shared phrase kernel (operators/phrase.py) in one
+    pass, repeated phrase terms included."""
+    return pd.Series(row_matches(tp_col, phrase_col, slop_col) > 0)
 
 
 _sloppy_udf = F.pandas_udf(sloppy_match_batch, T.BooleanType())
+
+
+def docs_with_all(scan: DataFrame, terms, *aggs) -> DataFrame:
+    """The docs of ``scan`` holding every one of ``terms`` → (doc_id,
+    mtps, n_found, *aggs): ``mtps`` is the doc's ONE
+    collect_list(struct(term, positions)), the input row of the
+    relational phrase and span kernels."""
+    return (
+        scan.groupBy("doc_id")
+        .agg(
+            F.collect_list(
+                F.struct(F.col("term"), F.col("positions"))
+            ).alias("mtps"),
+            F.countDistinct("term").alias("n_found"),
+            *aggs,
+        )
+        .where(F.col("n_found") == len(set(terms)))
+    )
 
 
 def phrase_topdocs(
@@ -126,24 +117,17 @@ def phrase_topdocs(
     than the one doc-keyed agg; candidate count ≤ df(rarest member term).
 
     Returns (doc_id, phrase_freq) — top-k by freq desc, doc_id asc.
-    Requires pairwise-distinct member terms (Σ tf double-counts repeated
-    members; the clause scorer handles those via the combinatorial path).
+    Requires pairwise-distinct member terms (this Σ tf counts each member
+    once; the clause scorer counts a repeated member once per occurrence).
     """
     if len(set(phrase)) != len(phrase):
         raise ValueError("phrase_topdocs requires pairwise-distinct terms")
-    cand = (
+    cand = docs_with_all(
         postings.where(
             (F.col("field") == field) & F.col("term").isin(list(phrase))
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.collect_list(
-                F.struct(F.col("term"), F.col("positions"))
-            ).alias("mtps"),
-            F.sum("tf").cast("long").alias("phrase_freq"),
-            F.countDistinct("term").alias("n_found"),
-        )
-        .where(F.col("n_found") == len(set(phrase)))
+        ),
+        phrase,
+        F.sum("tf").cast("long").alias("phrase_freq"),
     )
     matched = cand.withColumn(
         "matched",
@@ -168,44 +152,13 @@ def span_min_gap_batch(
     p_1 < p_2 < … < p_n of the span terms, where
     gap = (p_n − p_1) − (n − 1); −1 when no ordered chain exists.
 
-    DP over the position lists (O(Σ|L_i|·log) per doc): for each chain end
-    q ∈ L_i keep the MAXIMAL feasible chain start (prefix-max over earlier
-    ends < q), so the final minimum over ends is the tightest window.
-    Strict ordering makes position-distinctness automatic, so repeated
-    span terms need no special casing (unlike the sloppy matcher)."""
-    import bisect
-
-    from fuzzy_wiki_spark.codec import positions_by_term
-
+    The DP is spans._min_gap_ordered, shared with the slot spans. Strict
+    ordering makes position-distinctness automatic, so repeated span
+    terms need no special casing."""
     out = []
     for tps, terms in zip(tp_col, terms_col):
-        posmap = positions_by_term(tps)
-        lists = [sorted(posmap.get(t, ())) for t in terms]
-        if any(not pl for pl in lists):
-            out.append(-1)
-            continue
-        cur = {p: p for p in lists[0]}  # chain end -> maximal chain start
-        ok = True
-        for li in lists[1:]:
-            ends = sorted(cur)
-            pmax, m = [], -(1 << 62)
-            for p in ends:
-                m = max(m, cur[p])
-                pmax.append(m)
-            nxt = {}
-            for q in li:
-                i = bisect.bisect_left(ends, q) - 1
-                if i >= 0:
-                    nxt[q] = pmax[i]
-            cur = nxt
-            if not cur:
-                ok = False
-                break
-        if not ok:
-            out.append(-1)
-            continue
-        n = len(terms)
-        out.append(min(q - s - (n - 1) for q, s in cur.items()))
+        lists = _slot_lists(positions_by_term(tps), [(t,) for t in terms])
+        out.append(-1 if lists is None else _min_gap_ordered(lists))
     return pd.Series(out, dtype="int64")
 
 
@@ -224,18 +177,11 @@ def span_near_topdocs(
     proximity ranking, the piece Lucene exposes as SpanNearQuery that the
     unordered sloppy phrase (O17) cannot express ("A before B" ≠ "A near
     B"). Same single-scan + doc-keyed-agg plan as phrase_topdocs."""
-    cand = (
+    cand = docs_with_all(
         postings.where(
             (F.col("field") == field) & F.col("term").isin(list(set(terms)))
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.collect_list(
-                F.struct(F.col("term"), F.col("positions"))
-            ).alias("mtps"),
-            F.countDistinct("term").alias("n_found"),
-        )
-        .where(F.col("n_found") == len(set(terms)))
+        ),
+        terms,
     )
     gapped = cand.withColumn(
         "min_gap",
@@ -641,30 +587,13 @@ def span_cover_batch(tp_col: pd.Series, terms_col: pd.Series) -> pd.Series:
     covering window max(p_i) − min(p_i) over one occurrence choice of
     EVERY span term, any order; −1 when a term is absent.
 
-    Classic k-sorted-lists minimal-range sweep: one pointer per list,
-    range = max(front) − min(front), advance the minimum's pointer —
-    O(Σ|L_i|·k) per doc with k = |terms| (query-sized)."""
-    from fuzzy_wiki_spark.codec import positions_by_term
-
+    The sweep is spans._min_cover_unordered, shared with the slot
+    spans."""
     out = []
     for tps, terms in zip(tp_col, terms_col):
-        posmap = positions_by_term(tps)
-        lists = [sorted(posmap.get(t, ())) for t in dict.fromkeys(terms)]
-        if any(not pl for pl in lists):
-            out.append(-1)
-            continue
-        ptr = [0] * len(lists)
-        best = 1 << 62
-        while True:
-            fronts = [li[p] for li, p in zip(lists, ptr)]
-            lo, hi = min(fronts), max(fronts)
-            if hi - lo < best:
-                best = hi - lo
-            i = fronts.index(lo)
-            ptr[i] += 1
-            if ptr[i] >= len(lists[i]):
-                break
-        out.append(best)
+        slots = [(t,) for t in dict.fromkeys(terms)]
+        lists = _slot_lists(positions_by_term(tps), slots)
+        out.append(-1 if lists is None else _min_cover_unordered(lists))
     return pd.Series(out, dtype="int64")
 
 
@@ -685,18 +614,11 @@ def span_within_topdocs(
     span_near_topdocs; the UDF touches only candidate docs that contain
     every term."""
     uniq = list(dict.fromkeys(terms))
-    cand = (
+    cand = docs_with_all(
         postings.where(
             (F.col("field") == field) & F.col("term").isin(uniq)
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.collect_list(
-                F.struct(F.col("term"), F.col("positions"))
-            ).alias("mtps"),
-            F.countDistinct("term").alias("n_found"),
-        )
-        .where(F.col("n_found") == len(uniq))
+        ),
+        uniq,
     )
     covered = cand.withColumn(
         "min_cover",
@@ -719,36 +641,18 @@ def mpp_freq_batch(
     freq form (Σ member tfs gated by the match, myTermStats.java:56-63
     semantics); 0 when nothing matches.
 
-    Anchor-chain bases are one set intersection of shifted position
-    lists; each expansion then costs a membership probe per base."""
-    from fuzzy_wiki_spark.codec import positions_by_term
-
-    out = []
-    for tps, anchors, exps in zip(tp_col, anchors_col, exps_col):
-        posmap = positions_by_term(tps)
-        alists = [posmap.get(t) for t in anchors]
-        if any(not pl for pl in alists):
-            out.append(0)
-            continue
-        bases = set(alists[0])
-        for i, li in enumerate(alists[1:], start=1):
-            bases &= {p - i for p in li}
-            if not bases:
-                break
-        if not bases:
-            out.append(0)
-            continue
-        n_anchor = len(anchors)
-        anchor_tf = sum(len(pl) for pl in alists)
-        freq = 0
+    Each expansion's phrase is one exact (slop 0) pass of the shared
+    phrase kernel over the batch (operators/phrase.py)."""
+    flat = row_positions(tp_col)
+    n = len(tp_col)
+    tf = {t: np.bincount(c, minlength=n) for t, (c, _) in flat.items()}
+    out = np.zeros(n, dtype=np.int64)
+    keys = ((tuple(a), tuple(e)) for a, e in zip(anchors_col, exps_col))
+    for (anchors, exps), sub in row_groups(flat, keys):
+        anchor_tf = sum(tf.get(t, 0) for t in anchors)
         for e in exps:
-            el = posmap.get(e)
-            if not el:
-                continue
-            eset = set(el)
-            if any(b + n_anchor in eset for b in bases):
-                freq += anchor_tf + len(el)
-        out.append(freq)
+            hit = anchor_counts(sub, anchors + (e,), 0, n) > 0
+            out += np.where(hit, anchor_tf + tf.get(e, 0), 0)
     return pd.Series(out, dtype="int64")
 
 

@@ -170,7 +170,8 @@ Top level:
 - ``aggs``: ``terms`` (with metric sub-``aggs`` — avg/sum/min/max/
   value_count/cardinality, all inside ONE combinable groupBy — or a
   ``top_hits`` sub-agg: top-m hits within each bucket via
-  facet-partitioned window rank over the full scored set) /
+  facet-partitioned window rank over the full scored set, for ``term``
+  and OR ``match`` queries only — other kinds raise ValueError) /
   ``stats`` / ``date_histogram`` / ``range`` /
   ``histogram`` / ``cardinality`` / ``percentiles`` / ``value_count``
   / ``missing`` / ``global`` / ``filters`` / ``significant_terms`` /
@@ -1631,6 +1632,18 @@ def es_search(
                     raise ValueError(
                         "top_hits must be the only sub-agg in the "
                         "pinned subset"
+                    )
+                # bucket hits are the OR-match over qterms: only term
+                # and OR match queries have those main hits
+                if not (kind == "term" or kind == "match" and not any(
+                    isinstance(v, dict) and (
+                        v.get("operator", "or") != "or"
+                        or v.get("minimum_should_match")
+                    )
+                    for v in query["match"].values()
+                )):
+                    raise ValueError(
+                        "top_hits is pinned to term and OR match queries"
                     )
                 (th_body,), = [list(sub.values())[0].values()]
                 m = int(th_body.get("size", 3))

@@ -201,7 +201,7 @@ def execute_extended(
     (doc_id,) match sets for gating. Scoring semantics per module
     docstring. Ties: score desc, doc_id asc.
     """
-    from fuzzy_wiki_spark.operators.topk import _sloppy_udf, idf
+    from fuzzy_wiki_spark.operators.topk import _sloppy_udf, docs_with_all, idf
 
     # ---- driver-side stats for literal terms (point lookups, tiny)
     lit_terms = atom_terms(eq)
@@ -228,18 +228,11 @@ def execute_extended(
                 idf(df_map.get((atom.field, t), 0), doc_count)
                 for t in atom.terms
             )
-            cand = (
-                base.where(F.col("term").isin(list(atom.terms)))
-                .groupBy("doc_id")
-                .agg(
-                    F.collect_list(
-                        F.struct(F.col("term"), F.col("positions"))
-                    ).alias("mtps"),
-                    F.sum("tf").alias("freq"),
-                    F.countDistinct("term").alias("nf"),
-                    F.first("dl").alias("dl"),
-                )
-                .where(F.col("nf") == len(set(atom.terms)))
+            cand = docs_with_all(
+                base.where(F.col("term").isin(list(atom.terms))),
+                atom.terms,
+                F.sum("tf").alias("freq"),
+                F.first("dl").alias("dl"),
             )
             freq, dlc = (
                 F.col("freq").cast("double"),

@@ -1236,6 +1236,22 @@ def test_top_hits_subagg_and_term_bool_leaves(spark, setup):
     assert rows(out["hits"]) == rows(want2)
 
 
+def test_top_hits_rejects_queries_it_cannot_score(setup):
+    """Bucket hits are scored as the OR-match over the query's terms, so
+    a query kind whose main hits are not that match (here a doc-value
+    range query, which binds no terms) is refused, not answered with
+    empty buckets."""
+    idx, dv = setup
+    with pytest.raises(ValueError, match="top_hits"):
+        es_search(idx, {
+            "query": {"range": {"n_chars": {"gte": 10}}},
+            "aggs": {"by_lang": {
+                "terms": {"field": "lang"},
+                "aggs": {"top": {"top_hits": {"size": 2}}},
+            }},
+        }, docs=dv)
+
+
 def test_constant_score_general_filter_and_dis_max_term(spark, setup):
     idx, dv = setup
     out = es_search(None, {"query": {"constant_score": {

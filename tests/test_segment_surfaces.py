@@ -162,6 +162,7 @@ def test_expanded_parity(request, posts, index_fix):
         '+merge +join -stream fast',
         '"merge join"~3 s* part~2',
         '+"merge join" /s.rt/ key',
+        '"merge merge join"~3',
     ],
 )
 def test_extended_language_parity(request, spark, posts, stats, index_fix, q):

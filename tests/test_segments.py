@@ -33,7 +33,8 @@ def test_encode_group_roundtrip():
     assert np.all(np.diff(got_ids.astype(np.int64)) > 0)  # strictly increasing
     got_tfs = decode_tfs(enc["tfs"])
     assert np.array_equal(got_tfs, tfs.astype(np.uint64))
-    got_pos = decode_positions(enc["pos_lens"], enc["positions"])
+    lens, flat = decode_positions(enc["pos_lens"], enc["positions"])
+    got_pos = np.split(flat, np.cumsum(lens)[:-1])
     assert len(got_pos) == n
     for want, got in zip(pos_lists, got_pos):
         assert np.array_equal(got, want.astype(np.uint64))
@@ -46,7 +47,8 @@ def test_encode_group_unsorted_input_gets_sorted():
     enc = encode_group(doc_ids, tfs, pos)
     assert np.array_equal(delta_decode_blocked(enc["doc_ids"], BLOCK), [10, 20, 30])
     assert np.array_equal(decode_tfs(enc["tfs"]), [1, 2, 3])
-    got_pos = decode_positions(enc["pos_lens"], enc["positions"])
+    lens, flat = decode_positions(enc["pos_lens"], enc["positions"])
+    got_pos = np.split(flat, np.cumsum(lens)[:-1])
     assert [list(p) for p in got_pos] == [[0], [1, 2], [5]]
 
 
@@ -71,7 +73,8 @@ def test_empty_positions_docs():
     enc = encode_group(
         np.array([1, 2]), np.array([1, 1]), [np.array([]), np.array([3])]
     )
-    got = decode_positions(enc["pos_lens"], enc["positions"])
+    lens, flat = decode_positions(enc["pos_lens"], enc["positions"])
+    got = np.split(flat, np.cumsum(lens)[:-1])
     assert list(got[0]) == [] and list(got[1]) == [3]
 
 
