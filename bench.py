@@ -411,7 +411,7 @@ def main() -> None:
 
     # 2j) scoring-query wave on the serving path: dis_max + constant_score
     # (pure decode shapes) and combined_fields (BM25F over the merged
-    # synthetic field — dl from the _dl meta store)
+    # synthetic field — dl from the doc-length meta rows)
     timed(
         "seg_scoring_queries",
         lambda: (

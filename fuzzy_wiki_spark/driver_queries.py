@@ -8015,7 +8015,7 @@ def q_combined_fields(spark, sf_dir):
 
 def q_seg_combined_fields(spark, sf_dir):
     """combined_fields on the SEGMENT serving path (engine.py
-    SegmentIndex.combined_fields — merged dl from the _dl meta store).
+    SegmentIndex.combined_fields — merged dl from the doc-length meta rows).
     Oracle = ORACLE_SQL["combined_fields"] verbatim."""
     import tempfile
 
@@ -8569,7 +8569,6 @@ def q_seg_sayt(spark, sf_dir):
         edge_ngram_postings,
         sayt_topdocs,
     )
-    from fuzzy_wiki_spark.streaming.incremental import segments_to_postings
 
     posts = edge_ngram_postings(_docs(spark, sf_dir))
     idx = SegmentIndex.from_postings(

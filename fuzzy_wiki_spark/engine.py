@@ -607,32 +607,16 @@ class InvertedIndex:
 
 def write_index_stats(spark: SparkSession, path: str) -> None:
     """Derive + write term_stats/ and stats/ from the written segments'
-    METADATA columns (per-group df/sum_tf; the ``_dl`` meta rows carry
-    doc_count/sum_dl as df/sum_tf) — MBs of metadata instead of two more
-    full passes over the postings table. Shared by the one-shot build
-    (SegmentIndex.from_postings) and generation compaction
-    (streaming/incremental.py compact_generations)."""
-    from fuzzy_wiki_spark.operators.segment_query import META_DL
-    from fuzzy_wiki_spark.operators.segments import META_TERMS
+    METADATA columns (segments.term_totals / field_totals: per-group
+    df/sum_tf, and the doc-length rows' doc_count/sum_dl) — MBs of
+    metadata instead of two more full passes over the postings table.
+    Shared by the one-shot build (SegmentIndex.from_postings) and
+    generation compaction (streaming/incremental.py compact_generations)."""
+    from fuzzy_wiki_spark.operators.segments import field_totals, term_totals
 
     segs_r = spark.read.parquet(f"{path}/segments")
-    (
-        segs_r.where(~F.col("term").isin(META_TERMS))
-        .groupBy("field", "term")
-        .agg(F.sum("df").alias("df"), F.sum("sum_tf").alias("sum_tf"))
-        .write.mode("overwrite")
-        .parquet(f"{path}/term_stats")
-    )
-    (
-        segs_r.where(F.col("term") == META_DL)
-        .groupBy("field")
-        .agg(
-            F.sum("df").alias("doc_count"),
-            F.sum("sum_tf").alias("sum_dl"),
-        )
-        .write.mode("overwrite")
-        .parquet(f"{path}/stats")
-    )
+    term_totals(segs_r).write.mode("overwrite").parquet(f"{path}/term_stats")
+    field_totals(segs_r).write.mode("overwrite").parquet(f"{path}/stats")
 
 
 class SegmentIndex:
@@ -727,9 +711,8 @@ class SegmentIndex:
         re-tokenization).
 
         term_stats and field stats are aggregated from the SEGMENT
-        metadata columns (per-group df/sum_tf; the ``_dl`` meta rows carry
-        doc_count/sum_dl as df/sum_tf) — MBs of metadata instead of two
-        more full passes over the postings table."""
+        metadata columns (write_index_stats) — MBs of metadata instead of
+        two more full passes over the postings table."""
         from fuzzy_wiki_spark.operators.segments import (
             build_index_segments,
             write_segments,
@@ -913,10 +896,7 @@ class SegmentIndex:
         term_postings)."""
         from functools import reduce
 
-        from fuzzy_wiki_spark.operators.segment_query import META_REDIRECT
-        from fuzzy_wiki_spark.streaming.incremental import (
-            segments_to_postings,
-        )
+        from fuzzy_wiki_spark.operators.segments import redirect_ids
 
         clauses = compile_query(query)
         by_field: dict[str, set] = {}
@@ -930,13 +910,7 @@ class SegmentIndex:
             for f, ts in sorted(by_field.items())
         ]
         hits = reduce(lambda a, b: a.unionByName(b), frames).distinct()
-        red = (
-            segments_to_postings(
-                self.segments.where(F.col("term") == META_REDIRECT)
-            )
-            .select("doc_id")
-            .distinct()
-        )
+        red = redirect_ids(self.segments).distinct()
         return hits.join(red, "doc_id", "left_anti").count()
 
     def rescore_phrase(
@@ -1032,15 +1006,13 @@ class SegmentIndex:
         to the plain union of their disjoint doc sets — correct by the
         append-only contract.
 
-        ``with_dl`` joins each row's field length from the ``_dl`` meta
+        ``with_dl`` joins each row's field length from the doc-length meta
         rows (needed by BM25-scoring consumers; the join is doc_id-keyed
         against a doc_count-sized side — the same cost profile as the
         relational engine's doc_lens join).
         """
         from fuzzy_wiki_spark.operators.segment_query import term_in
-        from fuzzy_wiki_spark.streaming.incremental import (
-            segments_to_postings,
-        )
+        from fuzzy_wiki_spark.operators.segments import segments_to_postings
 
         seg_f = self.segments.where(F.col("field") == field)
         if isinstance(terms, DataFrame):
@@ -1065,15 +1037,10 @@ class SegmentIndex:
         immutable snapshot per SegmentIndex). None when the index has no
         deletes — the common case, which then costs zero scans/joins on
         every query instead of a pruned scan + anti-join per call."""
-        from fuzzy_wiki_spark.operators.segment_query import META_DELETED
-        from fuzzy_wiki_spark.streaming.incremental import (
-            segments_to_postings,
-        )
+        from fuzzy_wiki_spark.operators.segments import tombstone_ids
 
         if not hasattr(self, "_tombs_cache"):
-            t = segments_to_postings(
-                self.segments.where(F.col("term") == META_DELETED)
-            ).select("doc_id").persist()
+            t = tombstone_ids(self.segments).persist()
             self._tombs_cache = t if t.count() else None
             if self._tombs_cache is None:
                 t.unpersist()
@@ -1082,23 +1049,12 @@ class SegmentIndex:
     def _dls(self, field: str):
         """(doc_id, dl) for one field, decoded once per instance and
         persisted — a doc_count-sized frame every with_dl consumer joins."""
-        from fuzzy_wiki_spark.operators.segments import META_DL
-        from fuzzy_wiki_spark.streaming.incremental import (
-            segments_to_postings,
-        )
+        from fuzzy_wiki_spark.operators.segments import doc_lengths
 
         if not hasattr(self, "_dls_cache"):
             self._dls_cache = {}
         if field not in self._dls_cache:
-            self._dls_cache[field] = (
-                segments_to_postings(
-                    self.segments.where(
-                        (F.col("field") == field) & (F.col("term") == META_DL)
-                    )
-                )
-                .select("doc_id", F.col("tf").cast("int").alias("dl"))
-                .persist()
-            )
+            self._dls_cache[field] = doc_lengths(self.segments, field).persist()
         return self._dls_cache[field]
 
     def boolean(
@@ -1350,16 +1306,15 @@ class SegmentIndex:
         exactly why Lucene stores term vectors for MLT. Cost is one
         bucket's decode, bounded by index_size/n_buckets at any corpus
         scale (size n_buckets so a bucket fits an executor)."""
-        from fuzzy_wiki_spark.operators.segments import META_TERMS
-        from fuzzy_wiki_spark.streaming.incremental import (
+        from fuzzy_wiki_spark.operators.segments import (
             segments_to_postings,
+            vocabulary,
         )
 
         def _decode(seg):
-            # meta rows (_dl/_redirect/_deleted) ride the same layout —
-            # they are bookkeeping, not document vocabulary
-            seg = seg.where(~F.col("term").isin(META_TERMS))
-            posts = segments_to_postings(seg).where(
+            # meta rows ride the same layout — they are bookkeeping, not
+            # document vocabulary
+            posts = segments_to_postings(vocabulary(seg)).where(
                 F.col("doc_id") == doc_id
             )
             tombs = self._tombstones()
@@ -1575,14 +1530,12 @@ class SegmentIndex:
         from fuzzy_wiki_spark.operators.facets import (
             significant_terms as _significant_terms,
         )
-        from fuzzy_wiki_spark.operators.segments import META_TERMS
-        from fuzzy_wiki_spark.streaming.incremental import (
+        from fuzzy_wiki_spark.operators.segments import (
             segments_to_postings,
+            vocabulary,
         )
 
-        seg_f = self.segments.where(
-            (F.col("field") == field) & ~F.col("term").isin(META_TERMS)
-        )
+        seg_f = vocabulary(self.segments.where(F.col("field") == field))
         posts = segments_to_postings(seg_f)
         tombs = self._tombstones()
         if tombs is not None:
@@ -2138,7 +2091,7 @@ class SegmentIndex:
         """combined_fields (BM25F over the synthetic merged field) on
         the serving path (operators/multi_match.combined_fields_topk):
         term-pruned decode per queried field; merged doc lengths come
-        from the ``_dl`` meta store, never the corpus body."""
+        from the doc-length meta rows, never the corpus body."""
         from fuzzy_wiki_spark.operators.multi_match import (
             combined_fields_topk,
         )

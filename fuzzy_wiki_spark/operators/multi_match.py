@@ -579,7 +579,7 @@ def combined_fields_topk(
     weighted-tf agg; dl_c is one combinable agg over the doc_lens side-
     channel (never the corpus body) whose 1-row stats collect to the
     driver; df_c broadcasts. ``doc_lens`` is (doc_id, field, dl) —
-    P.doc_lens(postings) relationally, the ``_dl`` store on segments."""
+    P.doc_lens(postings) relationally, segments.doc_lengths on segments."""
     fields = [f for f, _ in field_weights]
     wmap = dict(field_weights)
     w_of = F.lit(None).cast("double")

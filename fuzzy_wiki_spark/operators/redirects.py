@@ -1,7 +1,7 @@
 """REDIRECT target resolution (reference O22, the half round 1 skipped).
 
 The reference treats a ``REDIRECT <target>`` document as invalid for
-ranking (that half is implemented in engine.py / the ``_redirect`` segment
+ranking (that half is implemented in engine.py / the redirect segment
 meta rows) but, when one is fetched, resolves the target and serves it iff
 the target exists and its title is sane (``WikiSearcher.java:81-117``:
 extracts the target title, rejects titles ≥ 50 chars, then looks the

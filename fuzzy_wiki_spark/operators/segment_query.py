@@ -6,7 +6,7 @@ layout (segments.py) and executes the reference's scatter / partial-top-k /
 gather shape (Searcher.java:66-68 + WikiSearcher O23/O24 + merge O15)
 entirely inside Spark:
 
-    segments.where(term IN query ∪ {_dl,_redirect})  ← partition+rowgroup prune
+    segments.where(term IN query ∪ META_*)           ← partition+rowgroup prune
       → repartitionById(n, bucket)                   ← bucket b → task b mod n,
         sortWithinPartitions(bucket)                   n = min(shuffle
         mapInPandas(bucket_topk per bucket)            partitions, buckets)
@@ -19,9 +19,10 @@ and serves both kernels (``bucket_topk`` for BM25 clauses,
 vectorized numpy over decoded arrays:
 - delta+varint decode of doc_ids/tfs (codec.py), memoised per
   (field, term) and k-way-merged across incremental generations,
-- per-doc dl from the bucket's ``_dl`` meta rows (same codec), and the
-  redirect and tombstone sets from ``_redirect``/``_deleted``; each kernel
-  applies its own exclusion policy to them,
+- per-doc dl from the bucket's ``META_DL`` meta rows (same codec), and
+  the redirect and tombstone sets from its ``META_REDIRECT``/
+  ``META_DELETED`` rows (segments.py owns the keys; this is their only
+  in-task reader); each kernel applies its own exclusion policy to them,
 - term-clause contributions via searchsorted joins,
 - sloppy-phrase via the shared phrase kernel (operators/phrase.py):
   positions are decoded lazily into one flat array per (field, term), and

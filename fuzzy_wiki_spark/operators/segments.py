@@ -48,11 +48,15 @@ import pandas as pd
 import pyarrow as pa
 
 import pyarrow.compute as pc
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from fuzzy_wiki_spark.codec import (
     binary_col as _binary_col,
     block_offsets,
     decode_position_runs,
+    decode_tfs,
+    delta_decode_blocked,
     delta_encode_blocked,
     encode_tfs,
     varint_decode,
@@ -62,15 +66,19 @@ from fuzzy_wiki_spark.codec import (
 )
 
 BLOCK = 128
-# meta rows, encoded like postings and read by segment_query.BucketView:
-# per-field doc lengths, redirect docs (O22 filter), and tombstones
-# (streaming/incremental.py delete_docs). Tombstoned docs are dropped from
-# results; they and their marker are physically removed at compaction.
-# Stats (df/doc_count/avgdl) keep counting them until then, which is
-# Lucene's deletes-until-merge semantics.
-META_DL = "_dl"
-META_REDIRECT = "_redirect"
-META_DELETED = "_deleted"
+# meta rows, encoded like postings: per-field doc lengths, redirect docs
+# (O22 filter), and tombstones (streaming/incremental.py delete_docs).
+# Tombstoned docs are dropped from results; they and their marker are
+# physically removed at compaction. Stats (df/doc_count/avgdl) keep
+# counting them until then, which is Lucene's deletes-until-merge
+# semantics. Each key starts with a space, which no analyzer emits (both
+# tokenizers split on it), so no document token can land in a meta row.
+# This module is their only writer; outside a scoring task (where
+# segment_query.BucketView decodes them) they are read only through the
+# readers at the end of this module.
+META_DL = " dl"
+META_REDIRECT = " redirect"
+META_DELETED = " deleted"
 META_TERMS = [META_DL, META_REDIRECT, META_DELETED]
 
 SEGMENTS_SCHEMA_DDL = (
@@ -361,8 +369,6 @@ def build_segments(
     Arrow dictionary array (zero-copy indices), so the segment output
     schema is unchanged. A field value outside ``field_names`` fails the
     job loudly rather than mis-bucketing."""
-    from pyspark.sql import functions as F
-
     names = sorted(field_names)
     code_expr = F.lit(None).cast("tinyint")
     for i in reversed(range(len(names))):
@@ -373,7 +379,7 @@ def build_segments(
     # project to exactly what the encoder consumes — `dl` in particular is
     # per-(doc,field) data replicated onto every posting row; letting it
     # ride the exchange + the Arrow socket would add ~8 bytes/row of pure
-    # waste (the _dl meta rows carry doc lengths instead)
+    # waste (the META_DL rows carry doc lengths instead)
     with_bucket = postings_df.select(
         "doc_id",
         code_expr.alias("field_code"),
@@ -423,15 +429,15 @@ def build_index_segments(
 ):
     """Full segment build: postings + per-bucket meta rows, one pipeline.
 
-    Meta rows reuse the posting codec (segment_query.py reads them):
-      - ``_dl`` per (bucket, field): doc_ids = bucket docs, tfs = exact dl —
-        the O(1) doc-length store (O18 done right; the reference walks the
-        whole vocabulary per lookup, myTermStats.java:69-88),
-      - ``_redirect`` per bucket: doc_ids of REDIRECT docs (O22 filter),
-        indexed-but-filtered exactly like the reference.
+    Meta rows reuse the posting codec (``doc_lengths``/``redirect_ids``
+    and segment_query.BucketView read them):
+      - ``META_DL`` per (bucket, field): doc_ids = bucket docs, tfs =
+        exact dl — the O(1) doc-length store (O18 done right; the
+        reference walks the whole vocabulary per lookup,
+        myTermStats.java:69-88),
+      - ``META_REDIRECT`` per bucket: doc_ids of REDIRECT docs (O22
+        filter), indexed-but-filtered exactly like the reference.
     """
-    from pyspark.sql import functions as F
-
     empty_pos = F.lit(b"").cast("binary")  # meta rows carry no positions
     dl_rows = (
         postings_df.groupBy("doc_id", "field")
@@ -486,4 +492,176 @@ def write_segments(segments_df, path: str, n_buckets: int = 32) -> None:
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(path)
+    )
+
+
+DECODED_POSTINGS_DDL = (
+    "doc_id long, field string, term string, tf int, positions binary"
+)
+_DECODED_PA = pa.schema(
+    [
+        pa.field("doc_id", pa.int64()),
+        pa.field("field", pa.string()),
+        pa.field("term", pa.string()),
+        pa.field("tf", pa.int32()),
+        pa.field("positions", pa.binary()),
+    ]
+)
+
+
+def segments_to_postings(segments_df: DataFrame) -> DataFrame:
+    """Decode segment rows back to posting rows (the encoder's inverse).
+
+    Meta rows decode uniformly: ``META_DL`` rows become (doc_id, field,
+    META_DL, dl) and marker rows (doc_id, field, META_REDIRECT or
+    META_DELETED, 1) — so feeding the output straight into
+    build_segments() reproduces a full index including its meta rows.
+    ``positions`` stays in the per-posting varint wire format
+    (postings.py): a group's position stream is SLICED at posting
+    boundaries via one continuation-bit scan — position bytes are never
+    decoded, so compaction moves bytes, not values. Python loops only
+    over segment ROWS (one row = a whole posting list)."""
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pa.set_cpu_count(1)
+        pa.set_io_thread_count(1)
+        for rb in batches:
+            n_rows = rb.num_rows
+            if n_rows == 0:
+                continue
+            fields = rb.column(rb.schema.get_field_index("field"))
+            terms = rb.column(rb.schema.get_field_index("term"))
+            doc_bufs = rb.column(rb.schema.get_field_index("doc_ids"))
+            tf_bufs = rb.column(rb.schema.get_field_index("tfs"))
+            pl_bufs = rb.column(rb.schema.get_field_index("pos_lens"))
+            pos_bufs = rb.column(rb.schema.get_field_index("positions"))
+            id_parts, tf_parts = [], []
+            pos_byte_parts, pos_off_parts = [], []
+            glens = np.empty(n_rows, dtype=np.int64)
+            for i in range(n_rows):
+                ids = delta_decode_blocked(
+                    doc_bufs[i].as_py(), BLOCK
+                ).astype(np.int64)
+                id_parts.append(ids)
+                glens[i] = ids.size
+                tf_parts.append(decode_tfs(tf_bufs[i].as_py()))
+                plens = varint_decode(pl_bufs[i].as_py()).astype(np.int64)
+                pb = pos_bufs[i].as_py()
+                raw = np.frombuffer(pb, dtype=np.uint8)
+                ends = np.flatnonzero((raw & 0x80) == 0) + 1
+                vb = np.concatenate(([0], ends))  # byte offset per value
+                cum = np.concatenate(([0], np.cumsum(plens)))
+                pos_byte_parts.append(pb)
+                pos_off_parts.append(vb[cum])  # per-posting byte offsets
+            doc_col = np.concatenate(id_parts)
+            tf_col = np.concatenate(tf_parts).astype(np.int32)
+            rep = pa.array(
+                np.repeat(np.arange(n_rows, dtype=np.int64), glens)
+            )
+            bases = np.concatenate(
+                ([0], np.cumsum([len(p) for p in pos_byte_parts]))
+            )
+            all_offs = np.concatenate(
+                [
+                    off[:-1] + base
+                    for off, base in zip(pos_off_parts, bases[:-1])
+                ]
+                + [bases[-1:]]
+            ).astype(np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(doc_col, type=pa.int64()),
+                    fields.take(rep),
+                    terms.take(rep),
+                    pa.array(tf_col, type=pa.int32()),
+                    _binary_col(b"".join(pos_byte_parts), all_offs),
+                ],
+                schema=_DECODED_PA,
+            )
+
+    cols = [
+        "field", "term", "doc_ids", "tfs", "pos_lens", "positions",
+    ]
+    return segments_df.select(*cols).mapInArrow(
+        decode, DECODED_POSTINGS_DDL
+    )
+
+
+# Readers of the meta rows. Every Spark-side consumer of per-doc facts
+# goes through these, so how those facts are stored stays this module's
+# business.
+
+
+def vocabulary(segs):
+    """The term rows of a segment table, meta rows left out."""
+    return segs.where(~F.col("term").isin(META_TERMS))
+
+
+def term_totals(segs):
+    """(field, term, df, sum_tf) summed from the term rows' metadata
+    columns — no posting decode."""
+    return (
+        vocabulary(segs)
+        .groupBy("field", "term")
+        .agg(F.sum("df").alias("df"), F.sum("sum_tf").alias("sum_tf"))
+    )
+
+
+def field_totals(segs):
+    """(field, doc_count, sum_dl): the dl rows carry a bucket's doc count
+    and length sum as their df/sum_tf, so this too reads metadata only."""
+    return (
+        segs.where(F.col("term") == META_DL)
+        .groupBy("field")
+        .agg(
+            F.sum("df").alias("doc_count"),
+            F.sum("sum_tf").alias("sum_dl"),
+        )
+    )
+
+
+def doc_lengths(segs, field: str):
+    """(doc_id, dl) of one field."""
+    rows = segs.where((F.col("field") == field) & (F.col("term") == META_DL))
+    return segments_to_postings(rows).select(
+        "doc_id", F.col("tf").cast("int").alias("dl")
+    )
+
+
+def _marked_ids(segs, marker: str):
+    # the term filter sits below the decode, so the scan pushes it down
+    # and prunes row groups to the marker rows
+    return segments_to_postings(segs.where(F.col("term") == marker)).select(
+        "doc_id"
+    )
+
+
+def redirect_ids(segs):
+    """doc_id of every REDIRECT doc."""
+    return _marked_ids(segs, META_REDIRECT)
+
+
+def tombstone_ids(segs):
+    """doc_id of every tombstoned doc, once per marker written."""
+    return _marked_ids(segs, META_DELETED)
+
+
+def tombstone_count(segs) -> int:
+    """Tombstone markers written, summed from the marker rows' df — no
+    decode."""
+    return int(
+        segs.where(F.col("term") == META_DELETED).agg(F.sum("df")).first()[0]
+        or 0
+    )
+
+
+def tombstone_rows(doc_ids):
+    """A single-column frame of doc ids → build_segments input rows that
+    tombstone them."""
+    return doc_ids.select(
+        F.col(doc_ids.columns[0]).cast("long").alias("doc_id"),
+        F.lit("content").alias("field"),
+        F.lit(META_DELETED).alias("term"),
+        F.lit(1).alias("tf"),
+        F.lit(b"").cast("binary").alias("positions"),
+        F.lit(0).alias("dl"),
     )

@@ -132,8 +132,9 @@ Top level:
   only).
 - ``min_score`` → post-filter on the scored hits.
 - ``track_total_hits: true`` → ``result["total"]`` (exact count of
-  the query's own match set — same field, same analyzed terms, same
-  redirect exclusion and filter context as the hits; match/bool/term).
+  the query's own match set — same field, same analyzed terms and
+  filter context as the hits, REDIRECT docs counted as the hits keep
+  them; match/bool/term).
 - ``sort``: default ``_score``; ``[{field: {"order": ...}}, ...]``
   routes to sort_by_field / sort_by_fields (no scoring; multi-field =
   lexicographic mixed-direction key), with ``search_after`` as the
@@ -311,15 +312,11 @@ def _total_hits(
     over both path and content fields, disagreeing with the hits on
     simple-mode indexes.) Lucene-TotalHitCountCollector shape: a
     term-pruned posting decode, one combinable groupBy — no scoring, no
-    dl join — with the same redirect exclusion and filter context as
-    the hits path. Match set mirrors ``boolean_topk``: all ``must``
-    terms AND no ``must_not`` term AND (≥1 ``should`` term when there
-    is no ``must``)."""
-    from fuzzy_wiki_spark.operators.segment_query import META_REDIRECT
-    from fuzzy_wiki_spark.streaming.incremental import (
-        segments_to_postings,
-    )
-
+    dl join — over the same ``term_postings`` rows and filter context
+    as the hits path, so REDIRECT docs count exactly when the hits keep
+    them. Match set mirrors ``boolean_topk``: all ``must`` terms AND no
+    ``must_not`` term AND (≥1 ``should`` term when there is no
+    ``must``)."""
     terms = sorted(set(must) | set(should) | set(must_not))
     if not terms:
         return 0
@@ -349,19 +346,7 @@ def _total_hits(
         cond &= F.col("_hs") == 1
     if msm:
         cond &= F.col("_ns") >= int(msm)
-    red = (
-        segments_to_postings(
-            idx.segments.where(F.col("term") == META_REDIRECT)
-        )
-        .select("doc_id")
-        .distinct()
-    )
-    return (
-        agg.where(cond)
-        .select("doc_id")
-        .join(red, "doc_id", "left_anti")
-        .count()
-    )
+    return agg.where(cond).count()
 
 
 def es_search(

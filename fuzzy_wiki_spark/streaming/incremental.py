@@ -26,17 +26,33 @@ contract), so df/doc_count/sum_dl are plain sums.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from pathlib import Path
-
-import numpy as np
-import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fuzzy_wiki_spark.operators.postings import build_postings, term_stats
-from fuzzy_wiki_spark.operators.segments import build_index_segments
+from fuzzy_wiki_spark.operators.segments import (
+    build_index_segments,
+    build_segments,
+    field_totals,
+    segments_to_postings,
+    term_totals,
+    tombstone_count,
+    tombstone_ids,
+    tombstone_rows,
+)
+
+
+def _write_generation(segs: DataFrame, path: str) -> None:
+    """Write one generation: one file per bucket, terms sorted within it."""
+    (
+        segs.repartition("bucket")
+        .sortWithinPartitions("field", "term")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(path)
+    )
 
 
 def append_batch(
@@ -67,13 +83,7 @@ def append_batch(
     posts = build_postings(batch_df, fields=fields, mode=mode)
     segs = build_index_segments(posts, docs_meta, n_buckets=n_buckets)
     gen_dir = str(Path(out_dir) / "segments" / f"gen={epoch_id}")
-    (
-        segs.repartition("bucket")
-        .sortWithinPartitions("field", "term")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(gen_dir)
-    )
+    _write_generation(segs, gen_dir)
     # per-generation overwrite (NOT a flat append): epoch replay after a
     # failure rewrites the same directory, keeping the stats exactly-once
     # like the segment data itself
@@ -120,9 +130,10 @@ def delete_docs(
     """Tombstone-delete documents from an incremental index — no rewrite
     of existing generations.
 
-    Writes a generation containing ONLY ``_deleted`` meta rows (the same
-    encoded segment layout; ``bucket = doc_id % n_buckets`` must match the
-    index's bucketing so the marker lands with its doc's postings). The
+    Writes a generation containing ONLY tombstone meta rows
+    (segments.tombstone_rows, in the same encoded segment layout;
+    ``bucket = doc_id % n_buckets`` must match the index's bucketing so
+    the marker lands with its doc's postings). The
     scorers drop tombstoned docs at decode time (segment_query.BucketView
     ``deleted``), so deletes take effect at the next query with zero
     query-path cost beyond the marker rows. Stats keep
@@ -135,29 +146,12 @@ def delete_docs(
     e.g. ``"del-0"``); rewriting the same ``gen`` is idempotent, like
     epoch replay in append_batch.
     """
-    from fuzzy_wiki_spark.operators.segment_query import META_DELETED
-    from fuzzy_wiki_spark.operators.segments import build_segments
-
     if not isinstance(doc_ids, DataFrame):
         doc_ids = spark.createDataFrame(
             [(int(d),) for d in doc_ids], "doc_id long"
         )
-    rows = doc_ids.select(
-        F.col(doc_ids.columns[0]).cast("long").alias("doc_id"),
-        F.lit("content").alias("field"),
-        F.lit(META_DELETED).alias("term"),
-        F.lit(1).alias("tf"),
-        F.lit(b"").cast("binary").alias("positions"),
-        F.lit(0).alias("dl"),
-    )
-    segs = build_segments(rows, n_buckets=n_buckets)
-    (
-        segs.repartition("bucket")
-        .sortWithinPartitions("field", "term")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(str(Path(out_dir) / "segments" / f"gen={gen}"))
-    )
+    segs = build_segments(tombstone_rows(doc_ids), n_buckets=n_buckets)
+    _write_generation(segs, str(Path(out_dir) / "segments" / f"gen={gen}"))
 
 
 def load_generations(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -172,14 +166,13 @@ def open_incremental(spark: SparkSession, out_dir: str):
 
     term_stats are re-aggregated across the per-generation term_stats
     appends; field stats (doc_count, avgdl) come from the generations'
-    ``_dl`` meta-row METADATA (df = docs, sum_tf = Σdl — no posting
+    doc-length rows' METADATA (segments.field_totals — no posting
     decode). Both are exact because generations hold disjoint doc sets.
     The returned index's search path handles the duplicate
     (bucket, field, term) rows by k-way merge (segment_query.BucketView),
     so an incremental index is searchable WITHOUT compaction — compaction
     is a read-amplification optimization, not a correctness requirement."""
     from fuzzy_wiki_spark.engine import SegmentIndex
-    from fuzzy_wiki_spark.operators.segment_query import META_DL
 
     segs = load_generations(spark, out_dir)
     ts = (
@@ -190,116 +183,22 @@ def open_incremental(spark: SparkSession, out_dir: str):
     )
     field_stats = {
         r["field"]: (int(r["doc_count"]), float(r["sum_dl"]) / r["doc_count"])
-        for r in (
-            segs.where(F.col("term") == META_DL)
-            .groupBy("field")
-            .agg(
-                F.sum("df").alias("doc_count"),
-                F.sum("sum_tf").alias("sum_dl"),
-            )
-            .collect()
-        )
+        for r in field_totals(segs).collect()
     }
     return SegmentIndex.from_parts(spark, segs, ts, field_stats)
 
 
-DECODED_POSTINGS_DDL = (
-    "doc_id long, field string, term string, tf int, positions binary"
-)
-_DECODED_PA = pa.schema(
-    [
-        pa.field("doc_id", pa.int64()),
-        pa.field("field", pa.string()),
-        pa.field("term", pa.string()),
-        pa.field("tf", pa.int32()),
-        pa.field("positions", pa.binary()),
-    ]
-)
-
-
-def segments_to_postings(segments_df: DataFrame) -> DataFrame:
-    """Decode segment rows back to posting rows (the encoder's inverse).
-
-    Meta rows decode uniformly: ``_dl`` rows become (doc_id, field, "_dl",
-    dl) and ``_redirect`` rows (doc_id, field, "_redirect", 1) — so feeding
-    the output straight into build_segments() reproduces a full index
-    including its meta rows. ``positions`` stays in the per-posting varint
-    wire format (postings.py): a group's position stream is SLICED at
-    posting boundaries via one continuation-bit scan — position bytes are
-    never decoded, so compaction moves bytes, not values. Python loops only
-    over segment ROWS (one row = a whole posting list)."""
-    from fuzzy_wiki_spark.codec import (
-        decode_tfs,
-        delta_decode_blocked,
-        varint_decode,
+def _merged_segments(spark: SparkSession, out_dir: str, n_buckets: int):
+    """The generation union re-encoded as one (bucket, field, term)
+    layout, tombstoned docs purged: their postings, their doc-length and
+    redirect rows, and the markers themselves (a marker's doc_id is the
+    tombstoned doc). The union is decoded once; the tombstone side reads
+    only the marker rows through a pushed-down term filter."""
+    segs = load_generations(spark, out_dir)
+    posts = segments_to_postings(segs).join(
+        tombstone_ids(segs), "doc_id", "left_anti"
     )
-    from fuzzy_wiki_spark.operators.segments import BLOCK
-
-    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pa.set_cpu_count(1)
-        pa.set_io_thread_count(1)
-        for rb in batches:
-            n_rows = rb.num_rows
-            if n_rows == 0:
-                continue
-            fields = rb.column(rb.schema.get_field_index("field"))
-            terms = rb.column(rb.schema.get_field_index("term"))
-            doc_bufs = rb.column(rb.schema.get_field_index("doc_ids"))
-            tf_bufs = rb.column(rb.schema.get_field_index("tfs"))
-            pl_bufs = rb.column(rb.schema.get_field_index("pos_lens"))
-            pos_bufs = rb.column(rb.schema.get_field_index("positions"))
-            id_parts, tf_parts = [], []
-            pos_byte_parts, pos_off_parts = [], []
-            glens = np.empty(n_rows, dtype=np.int64)
-            for i in range(n_rows):
-                ids = delta_decode_blocked(
-                    doc_bufs[i].as_py(), BLOCK
-                ).astype(np.int64)
-                id_parts.append(ids)
-                glens[i] = ids.size
-                tf_parts.append(decode_tfs(tf_bufs[i].as_py()))
-                plens = varint_decode(pl_bufs[i].as_py()).astype(np.int64)
-                pb = pos_bufs[i].as_py()
-                raw = np.frombuffer(pb, dtype=np.uint8)
-                ends = np.flatnonzero((raw & 0x80) == 0) + 1
-                vb = np.concatenate(([0], ends))  # byte offset per value
-                cum = np.concatenate(([0], np.cumsum(plens)))
-                pos_byte_parts.append(pb)
-                pos_off_parts.append(vb[cum])  # per-posting byte offsets
-            doc_col = np.concatenate(id_parts)
-            tf_col = np.concatenate(tf_parts).astype(np.int32)
-            rep = pa.array(
-                np.repeat(np.arange(n_rows, dtype=np.int64), glens)
-            )
-            bases = np.concatenate(
-                ([0], np.cumsum([len(p) for p in pos_byte_parts]))
-            )
-            all_offs = np.concatenate(
-                [
-                    off[:-1] + base
-                    for off, base in zip(pos_off_parts, bases[:-1])
-                ]
-                + [bases[-1:]]
-            ).astype(np.int32)
-            from fuzzy_wiki_spark.codec import binary_col
-
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(doc_col, type=pa.int64()),
-                    fields.take(rep),
-                    terms.take(rep),
-                    pa.array(tf_col, type=pa.int32()),
-                    binary_col(b"".join(pos_byte_parts), all_offs),
-                ],
-                schema=_DECODED_PA,
-            )
-
-    cols = [
-        "field", "term", "doc_ids", "tfs", "pos_lens", "positions",
-    ]
-    return segments_df.select(*cols).mapInArrow(
-        decode, DECODED_POSTINGS_DDL
-    )
+    return build_segments(posts, n_buckets=n_buckets)
 
 
 def compact_generations(
@@ -312,30 +211,14 @@ def compact_generations(
     so it also re-buckets: pass a larger ``n_buckets`` as the corpus grows
     and the layout re-spreads in the same pass).
 
-    Meta rows (``_dl``/``_redirect``) ride the same decode→encode path as
-    ordinary terms, and term_stats/stats are re-derived from the compacted
-    segments' metadata — the compacted index is bit-for-bit a one-shot
-    build's layout, so every search path treats it identically."""
+    Meta rows ride the same decode→encode path as ordinary terms, and
+    term_stats/stats are re-derived from the compacted segments'
+    metadata — the compacted index is bit-for-bit a one-shot build's
+    layout, so every search path treats it identically."""
     from fuzzy_wiki_spark.engine import SegmentIndex, write_index_stats
-    from fuzzy_wiki_spark.operators.segments import (
-        build_segments,
-        write_segments,
-    )
+    from fuzzy_wiki_spark.operators.segments import write_segments
 
-    from fuzzy_wiki_spark.operators.segment_query import META_DELETED
-
-    posts = segments_to_postings(load_generations(spark, out_dir))
-    # physically purge tombstoned docs: their postings, their _dl rows,
-    # and the _deleted markers themselves — the compacted index is clean
-    deleted = (
-        posts.where(F.col("term") == META_DELETED)
-        .select("doc_id")
-        .distinct()
-    )
-    posts = posts.where(F.col("term") != META_DELETED).join(
-        deleted, "doc_id", "left_anti"
-    )
-    segs = build_segments(posts, n_buckets=n_buckets)
+    segs = _merged_segments(spark, out_dir, n_buckets)
     write_segments(segs, f"{dst_dir}/segments", n_buckets=n_buckets)
     write_index_stats(spark, dst_dir)
     return SegmentIndex(spark, dst_dir)
@@ -374,27 +257,15 @@ def read_amplification(spark: SparkSession, out_dir: str) -> float:
 
 def tombstone_fraction(spark: SparkSession, out_dir: str) -> float:
     """Deleted-doc fraction (Lucene's deletes-pct merge trigger), from
-    segment META rows only: Σdf(_deleted) / Σdf(_dl)."""
-    from fuzzy_wiki_spark.operators.segment_query import (
-        META_DELETED,
-        META_DL,
-    )
-
-    rows = (
-        load_generations(spark, out_dir)
-        .where(F.col("term").isin([META_DL, META_DELETED]))
-        .groupBy("term", "field")
-        .agg(F.sum("df").alias("n"))
-        .collect()
-    )
-    # _dl rows exist once PER FIELD per doc (a 2-field index carries two
-    # per doc); tombstones are written once — compare against the doc
-    # count, i.e. the max per-field _dl total
+    the meta rows' metadata only: tombstone markers over the doc count."""
+    segs = load_generations(spark, out_dir)
+    # a doc has one length row per non-empty field: the doc count is the
+    # largest per-field total
     docs = max(
-        (int(r["n"]) for r in rows if r["term"] == META_DL), default=0
+        (int(r["doc_count"]) for r in field_totals(segs).collect()),
+        default=0,
     )
-    dels = sum(int(r["n"]) for r in rows if r["term"] == META_DELETED)
-    return dels / docs if docs else 0.0
+    return tombstone_count(segs) / docs if docs else 0.0
 
 
 def auto_compact(
@@ -418,10 +289,9 @@ def auto_compact(
       - tombstoned-doc fraction > ``max_deleted_frac``
         (Lucene's deletes-pct trigger).
 
-    The merge is compact_generations' decode → one (bucket, field, term)
-    re-encode shuffle → write, landed as a SINGLE new generation inside
-    the same index, so open_incremental/readers and future append epochs
-    continue unchanged. The swap sequence never exposes duplicates:
+    The merge is compact_generations' (``_merged_segments``), landed as a
+    SINGLE new generation inside the same index, so open_incremental/
+    readers and future append epochs continue unchanged. The swap sequence never exposes duplicates:
     the compacted generation is written under a dot-prefixed staging
     directory (invisible to Spark's file listing), old generations then
     move to a ``_trash`` directory (renames), and one final rename
@@ -432,12 +302,6 @@ def auto_compact(
     the same one append_batch's epoch directories already assume.
     Returns True when a compaction ran."""
     import shutil
-
-    from fuzzy_wiki_spark.operators.segment_query import META_DELETED
-    from fuzzy_wiki_spark.operators.segments import (
-        META_TERMS,
-        build_segments,
-    )
 
     gens = list_generations(out_dir)
     if len(gens) <= 1:
@@ -455,35 +319,14 @@ def auto_compact(
     seg_stage = seg_root / f".staging-{cname}"
     ts_stage = ts_root / f".staging-{cname}"
 
-    # decode the union, physically purge tombstoned docs (postings, _dl
-    # rows and the markers themselves), re-encode as one generation
-    posts = segments_to_postings(load_generations(spark, out_dir))
-    deleted = (
-        posts.where(F.col("term") == META_DELETED)
-        .select("doc_id")
-        .distinct()
-    )
-    posts = posts.where(F.col("term") != META_DELETED).join(
-        deleted, "doc_id", "left_anti"
-    )
-    segs = build_segments(posts, n_buckets=n_buckets)
-    (
-        segs.repartition("bucket")
-        .sortWithinPartitions("field", "term")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(str(seg_stage))
+    _write_generation(
+        _merged_segments(spark, out_dir, n_buckets), str(seg_stage)
     )
     # per-generation term_stats, re-derived from the compacted segments'
     # metadata columns (the write_index_stats rule — no posting decode)
-    (
-        spark.read.parquet(str(seg_stage))
-        .where(~F.col("term").isin(META_TERMS))
-        .groupBy("field", "term")
-        .agg(F.sum("df").alias("df"), F.sum("sum_tf").alias("sum_tf"))
-        .write.mode("overwrite")
-        .parquet(str(ts_stage))
-    )
+    term_totals(spark.read.parquet(str(seg_stage))).write.mode(
+        "overwrite"
+    ).parquet(str(ts_stage))
 
     trash = Path(out_dir) / "_trash" / cname
     trash.mkdir(parents=True, exist_ok=True)

@@ -14,6 +14,7 @@ from fuzzy_wiki_spark.streaming.incremental import (
     open_incremental,
     segments_to_postings,
 )
+from fuzzy_wiki_spark.operators.segments import META_DELETED
 
 DOCS = [
     (0, "merge join key fast"),
@@ -96,7 +97,7 @@ def test_compaction_purges_physically(spark, out, tmp_path_factory):
     # physically gone: no postings rows, no markers
     decoded = segments_to_postings(cidx.segments)
     assert decoded.where(F.col("doc_id").isin(DELETED)).count() == 0
-    assert decoded.where(F.col("term") == "_deleted").count() == 0
+    assert decoded.where(F.col("term") == META_DELETED).count() == 0
     # stats corrected: compacted counts only live docs
     assert cidx.field_stats["content"][0] == len(DOCS) - 2
     # un-compacted stats still count tombstoned docs (Lucene
@@ -108,7 +109,7 @@ def test_delete_gen_is_pure_markers(spark, out):
     gens = load_generations(spark, out)
     del_gen = gens.where(F.col("gen") == "del-0")
     assert {r.term for r in del_gen.select("term").distinct().collect()} == {
-        "_deleted"
+        META_DELETED
     }
 
 

@@ -271,34 +271,31 @@ def test_paging_total_rescore_source(spark, setup):
     assert all(r["score"] >= cut for r in out.collect())
 
     # track_total_hits: exact OR match count of the query's OWN match
-    # set — the caller-analyzed terms on the queried field with redirect
-    # exclusion (NOT count_matches, which re-analyzes with the porter
-    # chain and ORs over both fields — wrong on this simple-mode index)
+    # set — the caller-analyzed terms on the queried field, REDIRECT docs
+    # kept as the hits keep them (NOT count_matches, which re-analyzes
+    # with the porter chain and ORs over both fields — wrong on this
+    # simple-mode index)
     out = es_search(idx, dict(base, track_total_hits=True))
-    from fuzzy_wiki_spark.operators.segment_query import META_REDIRECT
-    from fuzzy_wiki_spark.streaming.incremental import (
-        segments_to_postings,
-    )
-
     matched = (
         idx.term_postings("content", ["binary", "tree"], with_dl=False)
         .select("doc_id")
         .distinct()
     )
-    red = (
-        segments_to_postings(
-            idx.segments.where(F.col("term") == META_REDIRECT)
-        )
-        .select("doc_id")
-        .distinct()
-    )
-    want_total = matched.join(red, "doc_id", "left_anti").count()
+    want_total = matched.count()
     assert out["total"] == want_total
     # and the total agrees with the query's actual full match set
     full = es_search(
         idx, dict(base, size=10_000, track_total_hits=True)
     )
     assert full["total"] == full["hits"].count()
+    # also when REDIRECT docs match (docs 99 and 199 of this corpus)
+    red = es_search(idx, {
+        "query": {"match": {"content": "REDIRECT binary"}},
+        "size": 10_000, "track_total_hits": True,
+    })
+    red_ids = {r.doc_id for r in red["hits"].collect()}
+    assert {99, 199} <= red_ids
+    assert red["total"] == len(red_ids)
 
     # rescore == the seg_rescore construction (rounded full scores →
     # window cut → phrase signal → combine) on the compiler's own

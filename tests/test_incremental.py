@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from fuzzy_wiki_spark.corpus import REFERENCE_QUERIES, generate_docs_pdf
 from fuzzy_wiki_spark.engine import SegmentIndex
+from fuzzy_wiki_spark.operators.segments import vocabulary
 from fuzzy_wiki_spark.streaming.incremental import (
     append_batch,
     compact_generations,
@@ -121,9 +122,7 @@ def test_segments_to_postings_roundtrip(spark, corpus_pdf, oneshot):
     from fuzzy_wiki_spark.operators.postings import build_postings
 
     decoded = (
-        segments_to_postings(oneshot.segments)
-        .where(~F.col("term").startswith("_"))
-        .toPandas()
+        segments_to_postings(vocabulary(oneshot.segments)).toPandas()
     )
     orig = (
         build_postings(spark.createDataFrame(corpus_pdf))

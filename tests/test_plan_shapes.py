@@ -445,3 +445,41 @@ def test_term_in_matches_isin_and_pushes_down(spark, tmp_path):
     posts = idx.term_postings("content", terms, with_dl=False)
     assert sorted((r.doc_id, r.term) for r in posts.collect()) == want
     assert re.search(r"PushedFilters: \[[^\]]*In\(term, ", _plan(posts))
+
+
+def test_compaction_merge_decodes_the_union_once(spark, tmp_path):
+    """Both compactions share one merge: the generation union is decoded
+    by ONE mapInArrow over an unpruned scan, and the tombstone side
+    decodes only the marker rows, its scan carrying the pushed-down term
+    filter."""
+    import pandas as pd
+
+    from fuzzy_wiki_spark.streaming.incremental import (
+        _merged_segments,
+        append_batch,
+        delete_docs,
+    )
+
+    d = str(tmp_path / "inc")
+    docs = spark.createDataFrame(
+        pd.DataFrame(
+            [(0, "merge join"), (1, "sort scan"), (2, "hash key")],
+            columns=["doc_id", "content"],
+        )
+    )
+    for g in range(2):
+        append_batch(
+            spark, docs.where(F.col("doc_id") % 2 == g), g, d, n_buckets=2,
+            mode="simple", fields={"content": "content"},
+        )
+    delete_docs(spark, [1], "del-0", d, n_buckets=2)
+    lines = _plan(_merged_segments(spark, d, 2)).splitlines()
+    scans = []  # the scan under each posting decode
+    for i, ln in enumerate(lines):
+        if "MapInArrow decode(" in ln:
+            scan = next(x for x in lines[i:] if "FileScan parquet" in x)
+            scans.append(scan.split("PushedFilters: ")[1].split("]")[0])
+    unpruned = [s for s in scans if s == "["]
+    pruned = [s for s in scans if s != "["]
+    assert len(unpruned) == 1 and len(pruned) == 1, lines
+    assert "EqualTo(term, " in pruned[0]
