@@ -313,10 +313,9 @@ def _total_hits(
     simple-mode indexes.) Lucene-TotalHitCountCollector shape: a
     term-pruned posting decode, one combinable groupBy — no scoring, no
     dl join — over the same ``term_postings`` rows and filter context
-    as the hits path, so REDIRECT docs count exactly when the hits keep
-    them. Match set mirrors ``boolean_topk``: all ``must`` terms AND no
-    ``must_not`` term AND (≥1 ``should`` term when there is no
-    ``must``)."""
+    as the hits path, REDIRECT docs included as in the hits. Match set
+    mirrors ``boolean_topk``: all ``must`` terms AND no ``must_not``
+    term AND (≥1 ``should`` term when there is no ``must``)."""
     terms = sorted(set(must) | set(should) | set(must_not))
     if not terms:
         return 0

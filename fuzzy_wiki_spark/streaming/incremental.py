@@ -291,8 +291,9 @@ def auto_compact(
 
     The merge is compact_generations' (``_merged_segments``), landed as a
     SINGLE new generation inside the same index, so open_incremental/
-    readers and future append epochs continue unchanged. The swap sequence never exposes duplicates:
-    the compacted generation is written under a dot-prefixed staging
+    readers and future append epochs continue unchanged. The swap
+    sequence never exposes duplicates: the compacted generation is
+    written under a dot-prefixed staging
     directory (invisible to Spark's file listing), old generations then
     move to a ``_trash`` directory (renames), and one final rename
     publishes the new generation before the trash is deleted — a crash
